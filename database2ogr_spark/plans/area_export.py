@@ -133,16 +133,14 @@ def export_kml(
     Input validation mirrors F4 (reference ``src/from-ground-up.js:961-964``):
     icon_number ∈ {11, 15} else 11; lang ∈ {en, fr} else en. The document
     name comes from the areas_vw row carried as data (not positionally like
-    the reference's ``rows[0][1].name`` — bug ledger).
+    the reference's ``rows[0][1].name`` — bug ledger), in the same collect
+    as the placemarks; a nonexistent area gives an empty name.
     """
     icon_number = icon_number if icon_number in (11, 15) else 11
     lang = lang if lang in ("en", "fr") else "en"
     table_dfs = _apply_warnify(build_table_dfs(catalog, area_id, "KML"), html=True)
-    area_rows = catalog.table("areas_vw").filter(f"id = {int(area_id)}").select("name").collect()
-    doc_name = area_rows[0][0] if area_rows else ""
     return kmlmod.kml_document(
         table_dfs,
-        doc_name=doc_name,
         lang=lang,
         icon_dir=f"{icon_dir_name}-{icon_number}",
         icon_number=icon_number,

@@ -10,9 +10,11 @@ icon ∈ {11, 15} else 11), and streams the archive back with the
 Content-Disposition the reference sets via ``res.attachment(name)``
 (``src/from-ground-up.js:969, :994``).
 
-Scale note: a per-request Spark job is the reference's own model (one
-document per request). A production deployment would put this behind a queue
-or pre-materialize per-area KMZs with one distributed job
+Scale note: per-request Spark work is the reference's own model (one
+document per request). A request's document costs one guarded count plus one
+collect over its six tables, with section order pinned on the driver
+(``sinks.geojson.collect_sections``). A production deployment would put this
+behind a queue or pre-materialize per-area KMZs with one distributed job
 (``export_ndjson``-style) and serve statically.
 """
 

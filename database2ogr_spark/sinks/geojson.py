@@ -9,6 +9,8 @@ the source table (reference ``:205-206``).
 Scale stance: the one-file ``FeatureCollection`` (K1) is inherently
 driver-bound — the reference builds it in memory (``src/from-ground-up.js:
 212-215``) and so must any engine; it exists for parity and small exports.
+A document costs one guarded count plus one collect over all its sections
+(``collect_sections``), with section order pinned on the driver.
 The scalable default is K2: proper newline-delimited GeoJSON written
 distributed via ``df.write.text`` (the reference's GeoJSON-LD writer forgot
 the newlines — bug ledger; we write real NDJSON).
@@ -16,9 +18,11 @@ the newlines — bug ledger; we write real NDJSON).
 
 from __future__ import annotations
 
+import functools
 import os
+from operator import itemgetter
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 #: columns that are hoisted onto the Feature, never into properties
@@ -85,6 +89,40 @@ def guard_driver_rows(df: DataFrame, *, cap: int, sink: str, alternative: str) -
     return n
 
 
+def collect_sections(
+    sections: list[DataFrame], *, cap: int, sink: str, alternative: str
+) -> list[list[Row]]:
+    """Collect the sections of one driver-side document (K1/K3) in one
+    guarded pass: one :func:`guard_driver_rows` count over all sections
+    (``cap`` is the total), then one ``collect()``. A document costs those
+    two actions, not two per section.
+
+    Each section's first column is its rendered string. Further columns
+    ride along and read NULL in the sections that lack them. Returns one
+    row list per section, in input order, each sorted by the rendered
+    string on the driver. Python orders ``str`` by code point, and UTF-8
+    preserves code-point order, so this is the order Spark's
+    ``orderBy`` on UTF8_BINARY bytes gives. Sorting pins the document's
+    bytes: a bare ``collect()`` would bake the partition layout into it.
+    """
+    tagged = [
+        df.select(
+            F.lit(i).alias("section"),
+            F.col(df.columns[0]).alias("rendered"),
+            *df.columns[1:],
+        )
+        for i, df in enumerate(sections)
+    ]
+    union = functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged
+    )
+    guard_driver_rows(union, cap=cap, sink=sink, alternative=alternative)
+    out: list[list[Row]] = [[] for _ in sections]
+    for row in union.collect():
+        out[row["section"]].append(row)
+    return [sorted(rows, key=itemgetter("rendered")) for rows in out]
+
+
 def feature_collection_json(
     feature_dfs: list[DataFrame], *, max_rows: int = DRIVER_SINK_MAX_ROWS
 ) -> str:
@@ -94,23 +132,18 @@ def feature_collection_json(
     :class:`DriverSinkOverflow` pointing at the distributed K2 sink.
 
     Section order follows the input list order, mirroring the reference's
-    query-list ordering guarantee (SURVEY.md §2.7). WITHIN a section,
-    rows are ordered by the rendered feature string (bug-ledger pin: the
+    query-list ordering guarantee (SURVEY.md §2.7). Within a section, rows
+    are ordered by the rendered feature string (bug-ledger pin: the
     reference's within-section order is whatever its DB scan returned —
-    accidental; a bare ``collect()`` here would likewise bake the
-    partition layout into the document, so the same export could hash
-    differently across cluster runs — caught by
-    ``scripts/check_invariance.py``).
+    accidental; see :func:`collect_sections`).
     """
-    budget = max_rows
-    chunks: list[str] = []
-    for df in feature_dfs:
-        budget -= guard_driver_rows(
-            df, cap=budget, sink="feature_collection_json (K1)",
-            alternative="write_ndjson (K2, distributed)",
-        )
-        rendered = with_feature(df).orderBy("feature")
-        chunks.extend(r[0] for r in rendered.collect())
+    sections = collect_sections(
+        [with_feature(df) for df in feature_dfs],
+        cap=max_rows,
+        sink="feature_collection_json (K1)",
+        alternative="write_ndjson (K2, distributed)",
+    )
+    chunks = [row["rendered"] for rows in sections for row in rows]
     return '{"type":"FeatureCollection","features":[' + ",".join(chunks) + "]}"
 
 

@@ -6,7 +6,9 @@ the string work in parallel); only the final Document assembly — ordering
 folders by the query list and wrapping with the Style header — happens on the
 driver over collected placemark strings, exactly the part that is inherently
 single-document (same boundary the reference has,
-``src/from-ground-up.js:579-624``).
+``src/from-ground-up.js:579-624``). All folders, and the document name, come
+back in one guarded count plus one collect (``geojson.collect_sections``);
+placemark order within a folder is pinned on the driver.
 
 Reference parity notes:
 - element order inside <Placemark> mirrors the reference's push order:
@@ -143,7 +145,7 @@ def style_url_col(df: DataFrame) -> Column:
         )
         expr = F.when(
             (table == "points_of_interest") & F.col("type").isNotNull(),
-            type_map.getItem(F.col("type")),
+            type_map[F.col("type")],
         ).otherwise(expr)
     if "class_code" in df.columns:
         zone_map = F.create_map(
@@ -156,14 +158,14 @@ def style_url_col(df: DataFrame) -> Column:
         )
         expr = F.when(
             (table == "zones") & F.col("class_code").isNotNull(),
-            zone_map.getItem(F.col("class_code")),
+            zone_map[F.col("class_code")],
         ).otherwise(expr)
     table_map = F.create_map(*[F.lit(x) for kv in TABLE_STYLES.items() for x in kv])
     # final literal fallback: a NULL styleUrl would null-propagate through the
     # placemark F.concat and crash kml_document's ''.join (the reference's
     # `styleUrl || style_urls[table]` never yields null either — it degrades
     # to a garbage-but-present string; we pin a default style id instead)
-    return F.coalesce(expr, table_map.getItem(table), F.lit("default_styles"))
+    return F.coalesce(expr, table_map[table], F.lit("default_styles"))
 
 
 def _xml_escape(col: Column) -> Column:
@@ -265,7 +267,6 @@ def placemark_xml(df: DataFrame) -> Column:
 def kml_document(
     table_dfs: list[tuple[str, DataFrame]],
     *,
-    doc_name: str,
     lang: str = "en",
     icon_dir: str = "files-11",
     icon_number: int = 11,
@@ -275,35 +276,44 @@ def kml_document(
 
     ``table_dfs`` is the ordered (table, DataFrame) list — folder order
     follows it, mirroring the reference's query-list ordering (SURVEY.md
-    §2.7). Placemark rendering runs distributed; only the collected strings
-    are concatenated here, guarded by ``max_rows`` (default
+    §2.7). Placemark rendering runs distributed; the placemark strings of
+    all folders come back in one guarded collect
+    (``geojson.collect_sections``, placemarks ordered by their string
+    within a folder), guarded by ``max_rows`` (default
     ``geojson.DRIVER_SINK_MAX_ROWS`` across all folders) — an over-cap
     export raises ``DriverSinkOverflow`` pointing at the distributed NDJSON
     path.
+
+    The document name is the ``name`` column of the ``areas_vw`` folder,
+    carried through the same collect; it is ``""`` when that folder is
+    empty or absent (no such area).
     """
     from database2ogr_spark.sinks.geojson import (
         DRIVER_SINK_MAX_ROWS,
-        guard_driver_rows,
+        collect_sections,
     )
 
-    budget = DRIVER_SINK_MAX_ROWS if max_rows is None else max_rows
-    lang_names = NAMES.get(lang, NAMES["en"])
-    folders = []
+    sections = []
     for table, df in table_dfs:
-        # within-folder placemark order is pinned to the rendered string
-        # (the reference's order is its DB's accidental row order; a bare
-        # collect() bakes the partition layout into the document — the
-        # same export would hash differently across cluster runs)
-        rendered = df.select(placemark_xml(df).alias("placemark")).orderBy(
-            "placemark"
-        )
-        budget -= guard_driver_rows(
-            rendered, cap=budget, sink="kml_document (K3)",
-            alternative="write_ndjson (K2, distributed) or per-partition KML fragments",
-        )
-        placemarks = [r[0] for r in rendered.collect()]
+        cols = [placemark_xml(df).alias("placemark")]
+        if table == "areas_vw":
+            cols.append(F.col("name").alias("doc_name"))
+        sections.append(df.select(*cols))
+    collected = collect_sections(
+        sections,
+        cap=DRIVER_SINK_MAX_ROWS if max_rows is None else max_rows,
+        sink="kml_document (K3)",
+        alternative="write_ndjson (K2, distributed) or per-partition KML fragments",
+    )
+    lang_names = NAMES.get(lang, NAMES["en"])
+    doc_name = ""
+    folders = []
+    for (table, _df), rows in zip(table_dfs, collected):
+        if table == "areas_vw" and rows:
+            doc_name = rows[0]["doc_name"]
+        placemarks = "".join(row["rendered"] for row in rows)
         fname = lang_names.get(table, table)
-        folders.append(f"<Folder>{''.join(placemarks)}<name>{fname}</name></Folder>")
+        folders.append(f"<Folder>{placemarks}<name>{fname}</name></Folder>")
     styles = style_header_xml(icon_dir, icon_number)
     return (
         '<?xml version="1.0" encoding="UTF-8"?>'

@@ -175,12 +175,52 @@ def test_driver_sink_row_cap_trips(spark):
     with pytest.raises(DriverSinkOverflow, match="K1.*write_ndjson"):
         feature_collection_json([df], max_rows=5)
     with pytest.raises(DriverSinkOverflow, match="K3.*distributed"):
-        kml_document([("points_of_interest", df)], doc_name="x", max_rows=5)
+        kml_document([("points_of_interest", df)], max_rows=5)
     # under the cap both assemble normally
     doc = feature_collection_json([df], max_rows=10)
     assert doc.count('"type":"Feature"') == 10
-    kml = kml_document([("points_of_interest", df)], doc_name="x", max_rows=10)
+    kml = kml_document([("points_of_interest", df)], max_rows=10)
     assert kml.count("<Placemark>") == 10
+
+    # the cap is the total across sections, not per section
+    six = df.limit(6)
+    with pytest.raises(DriverSinkOverflow, match="K1.*write_ndjson"):
+        feature_collection_json([six, six], max_rows=10)
+    with pytest.raises(DriverSinkOverflow, match="K3.*distributed"):
+        kml_document([("zones", six), ("points_of_interest", six)], max_rows=10)
+    doc = feature_collection_json([six, six], max_rows=12)
+    assert doc.count('"type":"Feature"') == 12
+    kml = kml_document([("zones", six), ("points_of_interest", six)], max_rows=12)
+    assert kml.count("<Placemark>") == 12
+
+
+def test_collect_sections_matches_spark_string_order(spark):
+    """collect_sections sorts on the driver with Python's str order; the
+    documents stay byte-identical to an orderBy only because code-point
+    order equals Spark's UTF-8 byte order, also past the BMP."""
+    from database2ogr_spark.sinks.geojson import collect_sections
+
+    words = [
+        "Zone", "zone", "Area", "Avalanche", "Avalanche path", "Aval",
+        "été", "etc", "Couloirs d’avalanche", "Couloirs d'avalanche",
+        # CJK, an astral-plane emoji (a surrogate pair in UTF-16, whose
+        # order would differ), the replacement character, U+FFFF
+        "雪崩", "山", "\U0001F3D4 peak", "\ufffd", "\uffff", "~", "",
+        "<Placemark>a", "<Placemark>ab", "<Placemark>é",
+    ]
+    df = spark.createDataFrame([(w,) for w in words], "s string")
+    spark_order = [r[0] for r in df.orderBy("s").collect()]
+    (rows,) = collect_sections([df], cap=len(words), sink="test", alternative="none")
+    assert [r["rendered"] for r in rows] == spark_order
+    assert spark_order == sorted(words)
+
+
+def test_kml_unknown_area_is_empty_document(ates_catalog):
+    # the area name rides in the placemark collect; no area row → ""
+    kml = export_kml(ates_catalog, 999)
+    assert kml.count("<Folder><name>") == 6
+    assert "<Placemark>" not in kml
+    assert kml.endswith("<name></name></Document></kml>")
 
 
 def test_document_sinks_partition_order_independent(ates_catalog):

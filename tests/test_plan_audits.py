@@ -94,6 +94,36 @@ def test_shuffle_budgets(spark, name, max_shuffles):
     assert n <= max_shuffles, f"{name}: {n} shuffles (budget {max_shuffles})\n{plan}"
 
 
+@pytest.mark.parametrize(
+    "export,max_jobs",
+    [
+        # one guarded count (broadcast + warnify shuffle + count agg + final)
+        # plus one collect (broadcast + warnify shuffle + result), with AQE
+        ("export_geojson_document", 7),
+        # the same two actions; the area name rides in the collect
+        ("export_kml", 7),
+    ],
+)
+def test_area_export_job_budget(spark, ates_catalog, export, max_jobs):
+    """Jobs an area document costs, counted from the status store. Textual
+    plans cannot see them: each action, and each AQE shuffle stage or
+    broadcast inside it, is its own job with fixed scheduling cost."""
+    from database2ogr_spark.plans import area_export
+
+    sc = spark.sparkContext
+    group = f"job-budget-{export}"
+    sc.setJobGroup(group, group)
+    try:
+        getattr(area_export, export)(ates_catalog, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store fills from the listener bus asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= max_jobs, f"{export}: {n} Spark jobs (budget {max_jobs})"
+
+
 def test_guarded_jaccard_plan_has_no_anti_join(spark):
     # the round-4 guarded plan masks hot shingles IN-KERNEL: the old
     # broadcast-anti-join + sizes-join chain must not reappear, and the
