@@ -71,7 +71,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: embeddings table reads it through this view (oracle_sql() rewrites
 #: `FROM embeddings)` mechanically), exactly as every queries() entry
 #: loads it through _emb(). No-op on clean corpora; on dirty corpora
-#: (scripts/check_nulls.py) it keeps both sides bit-aligned.
+#: (check_oracle.py --perturb nulls) it keeps both sides bit-aligned.
 #: Twins whose operator applies the event-time-domain ingestion guard
 #: (cleaning.within_time_domain / plausible_time). oracle_sql() rewrites
 #: every `FROM events` scan in THESE twins through the domain view;
@@ -85,7 +85,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: a user, and range_join only compares ts against interval bounds — so
 #: an implausible timestamp cannot corrupt a partition/bucket key the
 #: way it decides a gap-fill spine's fan-out; both are verified
-#: symmetric under scripts/check_times.py's extreme-timestamp probe.
+#: symmetric under the extreme-timestamp probe
+#: (check_oracle.py --perturb times).
 #: Guarding them would silently drop rows from models whose semantics
 #: ("all touches before first conversion", "all points inside the
 #: interval") make dropping a judgment call the caller should make.
@@ -472,7 +473,7 @@ def q_j3_style_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "customer").select(
         "c_custkey",
         X.coalesce_fallback(
-            style_map.getItem(F.col("c_mktsegment")), F.lit("default_style")
+            style_map[F.col("c_mktsegment")], F.lit("default_style")
         ).alias("style"),
     )
 
@@ -2590,7 +2591,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete, quarantine empty).
 
     The free-text column is deliberately NOT part of the exchange
-    (round-11 check_skew catch): the reader's records-are-lines contract
+    (round-11 ``--perturb skew`` catch): the reader's records-are-lines contract
     (csvfile.py module docstring — multiLine CSV serializes the scan per
     file and has no place in a 100 TB hot path) means a text field with
     embedded newlines is written as a QUOTED MULTI-LINE field that the
@@ -5013,8 +5014,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     new this round: streaming_dedup_evicting and
     decontaminate_semantic_lsh — then the FULL 37-row r5-green band (at
     its 6-round contract deadline, ordered as laid down in round 10;
-    csv_roundtrip inside it doubled as an (a) entry when the check_skew
-    newline catch changed its code), the five-row §2 quota band, THREE
+    csv_roundtrip inside it doubled as an (a) entry when the
+    ``--perturb skew`` newline catch changed its code), the five-row §2 quota band, THREE
     of the five oldest r6-green rows (validate_constraints …
     late_interaction), and two late-(a) entries — ates_kml_placemarks
     and ates_kml_document, whose rendering expression changed with the
@@ -5057,8 +5058,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate_fraction": q_decontaminate_fraction,
         "truncate_to_budget": q_truncate_to_budget,
         # csv_roundtrip doubles as a priority-(a) entry this round: its
-        # code changed (structured-columns-only exchange, the check_skew
-        # newline catch) — already inside the prefix via the r5 drain.
+        # code changed (structured-columns-only exchange, the
+        # --perturb skew newline catch) — already inside the prefix via the r5 drain.
         "csv_roundtrip": q_csv_roundtrip,
         "ivf_index_topk": q_ivf_index_topk,
         "orc_roundtrip": q_orc_roundtrip,
@@ -10798,7 +10799,7 @@ def oracle_sql() -> dict[str, str]:
         # keys on the UnsafeRow of the dedup columns, so a NULL user_id /
         # event_type matches ITSELF across batches — plain SQL equality
         # would let every null-key emission re-arm each batch (caught by
-        # scripts/check_nulls.py, round 11).
+        # check_oracle.py --perturb nulls, round 11).
         "streaming_dedup_evicting": """
             WITH k AS (
               SELECT user_id, event_type,
@@ -10898,7 +10899,7 @@ def oracle_sql() -> dict[str, str]:
             -- rendered string (round 7 — a bare collect() baked the scan
             -- split layout into the document; same bytes at any
             -- spark.sql.files.maxPartitionBytes / shuffle.partitions /
-            -- AQE setting, proven by scripts/check_invariance.py)
+            -- AQE setting, proven by check_oracle.py --perturb layout)
             FROM (VALUES
               ('folder:Area', 1, 281, 'cd70dfb82edd1df9d6e76fc37b602f6d'),
               ('folder:Points of interest', 2, 927, '1bde67ffe1cb68627f1ed66b50ba4ccd'),

@@ -53,20 +53,22 @@ def finite_or_null(c: Column) -> Column:
 def drop_nonfinite(df: DataFrame, col: str = "value") -> DataFrame:
     """Filter ``df`` to rows passing :func:`finite_or_null` on ``col`` —
     the one-line ingestion guard every metric-aggregating operator
-    applies (probed by ``scripts/check_nulls.py``). No-op on clean
+    applies (probed by ``check_oracle.py --perturb nulls``). No-op on clean
     data; pushes as a scan-time predicate (no shuffle)."""
     return df.filter(finite_or_null(F.col(col)))
 
 
 #: The engine-wide plausible event-time domain. Telemetry timestamped
-#: before the epoch or beyond 2100 is corrupt ingest, and it is expensive
-#: corruption: (a) pre-1970 epochs expose the one arithmetic the engines
-#: genuinely disagree on (Spark's unix_timestamp truncates seconds toward
-#: zero, SQL floor(epoch(ts)) goes toward -inf — off-by-one on every
-#: negative fraction), and (b) every min→max time spine (gap-fill grids,
-#: day spines, rolling windows) multiplies ONE corrupt row into the
-#: 10^5–10^6 spine rows its 234-year span covers, making plan cost a
-#: function of the single dirtiest row. Found by scripts/check_times.py.
+#: before the epoch or beyond 2100 is corrupt ingest: pre-1970 epochs
+#: expose the one arithmetic the engines genuinely disagree on (Spark's
+#: unix_timestamp truncates seconds toward zero, SQL floor(epoch(ts))
+#: goes toward -inf — off-by-one on every negative fraction). The domain
+#: does NOT bound min→max time spines (gap-fill grids, day spines,
+#: rolling windows): an in-domain epoch-zero row still stretches a spine
+#: across decades, so plan cost stays a function of the dirtiest row
+#: (gap_fill ×181, the rolling day spines ×658 on the times-perturbed
+#: sf0.001 fixture; an open ROADMAP item). Probed by
+#: ``check_oracle.py --perturb times``.
 TIME_DOMAIN = ("1970-01-01 00:00:00", "2100-01-01 00:00:00")
 
 

@@ -838,7 +838,8 @@ def u_shaped_attribution(
     only ORDERED by ts, never truncated or bucketed by it, so an
     implausible timestamp cannot corrupt a key; dropping it would
     silently remove a touch from the credit split. Symmetry with the
-    unguarded oracle twin is probed by scripts/check_times.py.
+    unguarded oracle twin is probed by
+    ``scripts/check_oracle.py --perturb times``.
     """
     ev = events.select(
         F.col(user_col).alias("u"),

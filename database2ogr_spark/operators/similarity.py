@@ -38,7 +38,8 @@ def is_valid_embedding(e: Column) -> Column:
 
     The DuckDB oracle twins apply the byte-identical predicate
     (``EMB_VALID_SQL`` in ``__spark_entry__``), so driver-graded results
-    agree on dirty data too (probed by ``scripts/check_nulls.py``).
+    agree on dirty data too (probed by
+    ``scripts/check_oracle.py --perturb nulls``).
     """
     finite = F.forall(
         e,

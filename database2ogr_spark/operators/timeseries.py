@@ -59,7 +59,8 @@ def range_join(
     ``1 + len/bucket`` explosion is the caller's validated input, not
     ingested event data. Dropping out-of-domain events here would
     silently change "every interval containing it" semantics. Symmetry
-    with the unguarded oracle twin is probed by scripts/check_times.py.
+    with the unguarded oracle twin is probed by
+    ``scripts/check_oracle.py --perturb times``.
     """
     b = F.lit(int(bucket_seconds)).cast("long")
     ev = events.withColumn(
@@ -194,8 +195,10 @@ def gap_fill_locf(
     (span/unit)·keys rows — pick ``unit`` so the grid is at most ~10× the
     event count, same sizing rule as range_join's bucket.
     """
-    # time-domain guard doubles as the spine bound: ONE corrupt 1965/2199
-    # row would otherwise inflate this key's grid by ~10^6 buckets
+    # the time-domain guard drops pre-1970/post-2100 rows but does NOT
+    # bound the spine: an epoch-zero row is in domain and still stretches
+    # its key's grid back to 1970 (×181 rows on the times-perturbed
+    # sf0.001 fixture); spine bounds are an open item (ROADMAP)
     events = within_time_domain(events, ts_col)
     sort_key = F.concat(
         F.lpad(

@@ -284,9 +284,9 @@ def kml_document(
     export raises ``DriverSinkOverflow`` pointing at the distributed NDJSON
     path.
 
-    The document name is the ``name`` column of the ``areas_vw`` folder,
-    carried through the same collect; it is ``""`` when that folder is
-    empty or absent (no such area).
+    The document name is the XML-escaped ``name`` column of the
+    ``areas_vw`` folder, carried through the same collect; it is ``""``
+    when that folder is empty or absent (no such area) or the name is NULL.
     """
     from database2ogr_spark.sinks.geojson import (
         DRIVER_SINK_MAX_ROWS,
@@ -297,7 +297,7 @@ def kml_document(
     for table, df in table_dfs:
         cols = [placemark_xml(df).alias("placemark")]
         if table == "areas_vw":
-            cols.append(F.col("name").alias("doc_name"))
+            cols.append(F.coalesce(_xml_escape(F.col("name")), F.lit("")).alias("doc_name"))
         sections.append(df.select(*cols))
     collected = collect_sections(
         sections,

@@ -223,6 +223,21 @@ def test_kml_unknown_area_is_empty_document(ates_catalog):
     assert kml.endswith("<name></name></Document></kml>")
 
 
+def test_kml_document_name_is_escaped(spark):
+    # area names with markup characters stay character data; NULL gives ""
+    import xml.etree.ElementTree as ET
+
+    from database2ogr_spark.sinks.kml import kml_document
+
+    ns = "{http://www.opengis.net/kml/2.2}"
+    for name in ["Bow & Yoho", "<Rogers> Pass", None]:
+        df = spark.createDataFrame(
+            [("areas_vw", name)], "table string, name string"
+        ).select("table", "name", F.lit(None).cast("string").alias("geometry"))
+        doc = ET.fromstring(kml_document([("areas_vw", df)]))
+        assert (doc.find(f"{ns}Document/{ns}name").text or "") == (name or "")
+
+
 def test_document_sinks_partition_order_independent(ates_catalog):
     """Round-7 invariance-sweep catch, pinned forever: the single-document
     sinks (K1 FeatureCollection, K3 KML) must emit byte-identical

@@ -1,5 +1,5 @@
 """Pins for the dirty-data ingestion contracts introduced by the
-NULL/NaN-injection probe (scripts/check_nulls.py, round 8).
+NULL/NaN-injection probe (``check_oracle.py --perturb nulls``, round 8).
 
 Each test freezes one contract the probe forced: what an operator does
 with NULL / NaN / Inf / degenerate rows. The probe grades the WHOLE

@@ -78,7 +78,7 @@ def test_csv_quarantine_survives_count_pruning(spark, tmp_path):
 
 def test_csv_embedded_newline_quarantined_not_corrupted(spark, tmp_path):
     """The records-are-lines contract under a Spark-WRITTEN file
-    (round-11 check_skew catch, the basis of csv_roundtrip's
+    (round-11 ``check_oracle.py --perturb skew`` catch, the basis of csv_roundtrip's
     structured-columns-only exchange): writing a text field with an
     embedded newline produces a QUOTED MULTI-LINE field, and the
     line-based reader must route every fragment of it to quarantine —

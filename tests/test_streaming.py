@@ -503,7 +503,7 @@ def test_dedup_eviction_semantics_lagging_cleanup(spark, tmp_path):
 def test_dedup_null_keys_match_themselves_across_batches(spark, tmp_path):
     """EMPIRICAL PIN of the null-key semantics underlying the
     streaming_dedup_evicting twin's IS NOT DISTINCT FROM membership
-    probes (the round-11 check_nulls catch): dropDuplicatesWithinWatermark
+    probes (the round-11 ``check_oracle.py --perturb nulls`` catch): dropDuplicatesWithinWatermark
     keys its state store on the UnsafeRow of the dedup columns, so a
     NULL key component matches ITSELF across micro-batches and the
     duplicate is suppressed like any other. Under plain SQL equality

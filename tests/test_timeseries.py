@@ -226,8 +226,9 @@ def test_gap_fill_locf_latest_in_bucket_wins_with_tiebreak(spark):
 def test_gap_fill_locf_time_domain_and_bucket_order(spark):
     """Supersedes the round-4 negative-epoch sort-key test: pre-1970
     event times are now outside cleaning.TIME_DOMAIN and excluded at
-    ingestion (they exposed cross-engine truncation divergence AND
-    unbounded spine fan-out — scripts/check_times.py). The padded key's
+    ingestion (they exposed cross-engine truncation divergence and
+    pre-1970 spine fan-out — ``check_oracle.py --perturb times``; an
+    in-domain epoch-zero row still fans out). The padded key's
     +10^18 negative-epoch offset remains in the code for robustness but
     is unreachable through gap_fill's public path; the later-wins bucket
     order is asserted on in-domain timestamps instead."""
