@@ -2862,20 +2862,14 @@ def q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     like ann_recall_lsh does for ANN. Twin composes the two verified pair
     twins."""
     docs = _t(spark, sf_dir, "documents")
-    # persist both pair tables: each feeds TWO branches (its count agg +
-    # the hit join), and without the persist the full guarded-Jaccard /
-    # banded-LSH chains execute twice each (measured ~2× this entry's
-    # cost). Pair tables are duplicate-pair-sized, tiny; bench clearCaches.
-    truth = (
-        DD.ngram_jaccard_pairs(docs, k_shingle=3, threshold=0.2, max_df=100)
-        .select("id_a", "id_b")
-        .persist()
-    )
-    cand = (
-        DD.minhash_lsh_pairs(docs, num_hashes=16, bands=4, threshold=0.2)
-        .select("id_a", "id_b")
-        .persist()
-    )
+    # both pair operators return checkpointed tables, so each feeds its
+    # count agg and the hit join without re-running its chain
+    truth = DD.ngram_jaccard_pairs(
+        docs, k_shingle=3, threshold=0.2, max_df=100
+    ).select("id_a", "id_b")
+    cand = DD.minhash_lsh_pairs(
+        docs, num_hashes=16, bands=4, threshold=0.2
+    ).select("id_a", "id_b")
     hit = truth.join(cand, ["id_a", "id_b"])
     return (
         truth.agg(F.count(F.lit(1)).alias("n_truth"))

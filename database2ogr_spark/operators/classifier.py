@@ -206,7 +206,7 @@ def quality_classifier_scores(
     previous shape featurized twice: once inside train, once for the
     scoring plan). The scored table is materialized via eager
     ``localCheckpoint`` before the feature blocks are released (the
-    operators/dedup._finalize lifecycle), so callers get a lineage-free
+    partitioning.finalize_lifecycle exit), so callers get a lineage-free
     result and no operator-owned blocks outlive the call. Identical
     values: y and label derive from the same coalesced expression, and
     the scoring math is unchanged.

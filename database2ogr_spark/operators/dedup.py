@@ -20,20 +20,18 @@ All hashing is the md5-based ``stable_hash64`` so the DuckDB oracle can
 reproduce results exactly; swap ``fast_hash64`` in for raw throughput.
 
 Persist lifecycle: the pair operators persist small intermediates
-(signature/gram tables) that both sides of their self-joins read. By
-default (``release_cache=True``) each operator finalizes its result with
-an eager ``localCheckpoint`` — the pair table (small by construction:
-thresholded matches, 3 scalars/row) materializes inside the call, lineage
-is truncated, and every operator-owned intermediate is unpersisted before
-returning, so the session carries NO net cached tables afterwards.  The
-checkpoint blocks themselves (result-sized, not corpus-sized) are
-reference-managed: the ContextCleaner drops them once the returned
-DataFrame is unreachable and a JVM GC runs (Spark triggers one
-periodically via ``spark.cleaner.periodicGC.interval``) — no manual
-``clearCache`` contract.  Callers composing one mega-plan across
-operators, or wanting fully lazy results, pass ``release_cache=False``
-and take over the old contract: call ``spark.catalog.clearCache()`` /
-``DataFrame.unpersist`` once results are materialized, as bench.py does.
+(signature/gram tables) that both sides of their self-joins read. Each
+operator exits through ``partitioning.finalize_lifecycle``: the pair table
+(small by construction: thresholded matches, 3 scalars/row) is eagerly
+``localCheckpoint``-ed inside the call, lineage is truncated, and every
+operator-owned intermediate is unpersisted before returning, so the
+session carries NO net cached tables afterwards. The checkpoint blocks
+themselves (result-sized, not corpus-sized) are reference-managed: the
+ContextCleaner drops them once the returned DataFrame is unreachable and a
+JVM GC runs (Spark triggers one periodically via
+``spark.cleaner.periodicGC.interval``) — no manual ``clearCache`` contract.
+The plans of those eager jobs are read back with
+``session.executed_plans``.
 """
 
 from __future__ import annotations
@@ -51,24 +49,7 @@ from database2ogr_spark.functions.hashing import (
     words,
 )
 from database2ogr_spark.functions.textstats import content_fingerprint
-from database2ogr_spark.operators.partitioning import spread
-
-
-def _finalize(
-    result: DataFrame, *owned: DataFrame, release: bool = True
-) -> DataFrame:
-    """Module persist-lifecycle exit point (see module docstring): when
-    ``release`` is set, materialize ``result`` with an eager
-    ``localCheckpoint`` (truncates lineage off the persisted
-    intermediates; blocks are ContextCleaner-managed, dropped once the
-    returned DataFrame is unreachable) and unpersist every operator-owned
-    intermediate.  When not, return ``result`` lazily and leave ``owned``
-    cached — the caller owns cleanup."""
-    if not release:
-        return result
-    from database2ogr_spark.operators.partitioning import finalize_lifecycle
-
-    return finalize_lifecycle(result, list(owned))
+from database2ogr_spark.operators.partitioning import finalize_lifecycle, spread
 
 
 def _guarded_gram_table(
@@ -112,7 +93,7 @@ def _guarded_gram_table(
 
     Returns ``(sh, owned)``: the (possibly re-derived) persisted gram
     table and the list of persisted tables the caller must hand to
-    :func:`_finalize` for release.
+    :func:`finalize_lifecycle` for release.
     """
     from database2ogr_spark.functions.gramkernel import distinct_gram_table
 
@@ -345,7 +326,6 @@ def dedup_incremental_lsh(
     bands: int = 4,
     threshold: float = 0.5,
     use_arrow: bool = True,
-    release_cache: bool = True,
 ) -> DataFrame:
     """Ingestion-time NEAR-duplicate dedup against an LSH signature store —
     the fuzzy twin of :func:`dedup_incremental` (which catches only exact
@@ -413,9 +393,7 @@ def dedup_incremental_lsh(
     # the batch's full document bodies (checkpointing those would copy the
     # corpus into block storage), while the id set is one scalar per
     # casualty — the anti-join below stays lazy over the caller's input
-    dead = _finalize(
-        hit_store.union(hit_batch).distinct(), batch, release=release_cache
-    )
+    dead = finalize_lifecycle(hit_store.union(hit_batch).distinct(), [batch])
     return new_docs.join(dead, on=id_col, how="left_anti")
 
 
@@ -429,7 +407,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     use_arrow: bool = True,
-    release_cache: bool = True,
 ) -> DataFrame:
     """Near-dup candidate pairs via MinHash LSH, scored by signature overlap.
 
@@ -441,7 +418,7 @@ def minhash_lsh_pairs(
     The signature table (~``8·num_hashes`` bytes/doc — tiny relative to the
     corpus) is persisted MEMORY_AND_DISK so the banding self-join reads it
     once instead of recomputing shingling+hashing for both sides; released
-    per the module persist-lifecycle contract (``release_cache``).
+    per the module persist-lifecycle contract.
     """
     assert num_hashes % bands == 0
 
@@ -480,7 +457,7 @@ def minhash_lsh_pairs(
         .filter(F.col("est_jaccard") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _finalize(pairs, sigs, release=release_cache)
+    return finalize_lifecycle(pairs, [sigs])
 
 
 def decontaminate(
@@ -735,7 +712,6 @@ def simhash_pairs(
     *,
     max_hamming: int = 3,
     use_arrow: bool = True,
-    release_cache: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming ≤ max_hamming — complete for any
     threshold.
@@ -748,7 +724,7 @@ def simhash_pairs(
     above that); the cost trade is explicit: higher thresholds → narrower
     chunks → more bucket collisions → more candidates to verify.
     Signatures are persisted (8 B/doc) so the self-join reads them once;
-    released per the module persist-lifecycle contract (``release_cache``).
+    released per the module persist-lifecycle contract.
     """
     sig_bits = 60
     n_chunks = min(max_hamming + 1, sig_bits)
@@ -799,7 +775,7 @@ def simhash_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _finalize(pairs, sigs, release=release_cache)
+    return finalize_lifecycle(pairs, [sigs])
 
 
 def ngram_jaccard_pairs(
@@ -812,7 +788,6 @@ def ngram_jaccard_pairs(
     use_arrow: bool = True,
     max_df: int | None = None,
     hot_broadcast_limit: int = 5_000_000,
-    release_cache: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs that share ≥1 shingle.
 
@@ -878,7 +853,7 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
         )
-        return _finalize(pairs, *owned, release=release_cache)
+        return finalize_lifecycle(pairs, owned)
     else:
         staged = spread(df).select(
             F.col(id_col).alias("id"), word_hash_structs(text_col).alias("wh")
@@ -925,7 +900,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return _finalize(jac, sh, release=release_cache)
+    return finalize_lifecycle(jac, [sh])
 
 
 def duplicate_spans(
@@ -937,7 +912,6 @@ def duplicate_spans(
     min_docs: int = 2,
     merge_gap: int | None = None,
     use_arrow: bool = True,
-    release_cache: bool = True,
 ) -> DataFrame:
     """Substring-level exact duplicate detection — the span-granular member
     of the dedup family (public Lee et al. 2022, "Deduplicating Training
@@ -989,7 +963,7 @@ def duplicate_spans(
             ).alias("pos", "gram"),
         )
     # read by the df-count agg AND the join side — persist (released per
-    # the module lifecycle contract via ``release_cache``)
+    # the module lifecycle contract)
     pos_table = pos_table.persist(StorageLevel.MEMORY_AND_DISK)
     if "first" in pos_table.columns:
         per_doc_grams = pos_table.filter(F.col("first")).select("gram", "id")
@@ -1019,7 +993,7 @@ def duplicate_spans(
         )
         .select(F.col("id").alias(id_col), "span_start", "span_end", "n_windows")
     )
-    return _finalize(spans, pos_table, release=release_cache)
+    return finalize_lifecycle(spans, [pos_table])
 
 
 def contamination_fraction(
@@ -1312,7 +1286,6 @@ def containment_pairs(
     threshold: float = 0.9,
     max_df: int | None = None,
     hot_broadcast_limit: int = 5_000_000,
-    release_cache: bool = True,
 ) -> DataFrame:
     """ASYMMETRIC near-dup detection — shingle overlap coefficient
     ``|A∩B| / min(|A|, |B|)`` (Szymkiewicz–Simpson; the symmetric
@@ -1370,4 +1343,4 @@ def containment_pairs(
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "n_a", "n_b", "shared", "containment", "jaccard")
     )
-    return _finalize(pairs, *owned, release=release_cache)
+    return finalize_lifecycle(pairs, owned)

@@ -13,7 +13,7 @@ Scale design (the part that must survive 100 TB / 1000 executors):
   clusters (diameter 1-3 in practice), so the round count is tiny and
   independent of corpus size; the per-round cost is one shuffle of the edge
   table on the join key — no cross product, no driver-side graph.
-- Lineage is truncated with ``localCheckpoint(eager=True)`` every round.
+- Lineage is truncated with ``localCheckpoint`` every round.
   Without it the plan doubles per iteration and Catalyst analysis time blows
   up long before the data does — the classic iterative-Spark failure mode.
 - Convergence is detected by the monotone invariant: labels only ever
@@ -146,7 +146,6 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         new_sum = _label_sum(new_labels)
-        labels.unpersist()
         labels = new_labels
         if new_sum == prev_sum:  # monotone decrease hit fixpoint
             break
@@ -319,11 +318,10 @@ def connected_components_star(
             .filter(F.col("u") != F.col("v"))
             .distinct()
             .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         n_small = small.count()
         same = n_small == n_edges and small.subtract(e).isEmpty()
-        e.unpersist()
+        e.unpersist()  # the persisted input; later rounds hold checkpoints
         e = small
         n_edges = n_small
         if same:
@@ -338,9 +336,7 @@ def connected_components_star(
     labels = e.select(F.col("u").alias("id"), F.col("v").alias("component")).unionByName(
         roots.select("id", F.col("id").alias("component"))
     )
-    out = labels.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    return finalize_lifecycle(labels, [e])
 
 
 def pagerank_integer(
@@ -578,8 +574,6 @@ def triangle_count(
             .alias("clustering_c"),
         )
     )
-    # same persist-lifecycle exit as operators/dedup._finalize: materialize
-    # (lineage truncated off the persisted tables) then release
     return finalize_lifecycle(out, [oriented, deg, und])
 
 
@@ -984,11 +978,6 @@ def khop_reach_approx(
     out = per_node.select(
         F.col("v").alias("node"), F.round(est, 6).alias("estimate")
     )
-    # shared lifecycle exit (r12 — previously a hand-rolled eager
-    # checkpoint + unpersist; finalize_lifecycle is behavior-identical and
-    # additionally honors the D2O_KEEP_LINEAGE plan-capture knob, so the
-    # estimate tail above is auditable in explain() output — the per-hop
-    # checkpoints inside the loop still truncate the iteration itself)
-    from database2ogr_spark.operators.partitioning import finalize_lifecycle
-
+    # the per-hop checkpoints inside the loop truncate the iteration; the
+    # estimate tail's plan is read back with session.executed_plans
     return finalize_lifecycle(out, [e])

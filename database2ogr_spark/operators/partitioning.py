@@ -10,8 +10,6 @@ default parallelism.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -24,16 +22,10 @@ def finalize_lifecycle(result: DataFrame, owned: list[DataFrame]) -> DataFrame:
     and unpersist everything in ``owned``. Leak-free by construction —
     nothing stays in the block manager after the operator returns.
 
-    Diagnostics escape hatch: with ``D2O_KEEP_LINEAGE=1`` the lazy plan is
-    returned and caches are left in place, so ``explain()`` shows the full
-    computation with its InMemoryTableScan reuse points instead of a
-    ``Scan ExistingRDD`` over the checkpoint. Plan capture only — callers
-    of this mode own cache cleanup (``spark.catalog.clearCache()``), and
-    timings must never be taken under it (the checkpoint's materialization
-    cost is part of the operator).
+    This is the only way an operator releases what it persisted. The
+    checkpoint job's plan, with its InMemoryTableScan reuse points, is
+    read back with ``session.executed_plans``.
     """
-    if os.environ.get("D2O_KEEP_LINEAGE") == "1":
-        return result
     out = result.localCheckpoint(eager=True)
     for df in owned:
         df.unpersist()

@@ -157,7 +157,6 @@ def novelty_stats(
     text_col: str = "text",
     *,
     k_shingle: int = 13,
-    release_cache: bool = True,
 ) -> DataFrame:
     """Cross-document duplicated-n-gram fraction — the ACROSS-corpus
     complement of :func:`repetition_stats` (which is within-doc): for each
@@ -181,11 +180,13 @@ def novelty_stats(
     from pyspark import StorageLevel
 
     from database2ogr_spark.functions.gramkernel import gram_position_table
-    from database2ogr_spark.operators.dedup import _finalize
-    from database2ogr_spark.operators.partitioning import spread
+    from database2ogr_spark.operators.partitioning import (
+        finalize_lifecycle,
+        spread,
+    )
 
     pos_table = gram_position_table(spread(df), id_col, text_col, k_shingle)
-    # read by the df-count agg AND the join side (lifecycle per dedup.py)
+    # read by the df-count agg AND the join side; released on exit
     pos_table = pos_table.persist(StorageLevel.MEMORY_AND_DISK)
     gram_df = (
         pos_table.filter(F.col("first"))
@@ -215,7 +216,7 @@ def novelty_stats(
             "max_gram_docs",
         )
     )
-    return _finalize(out, pos_table, release=release_cache)
+    return finalize_lifecycle(out, [pos_table])
 
 
 def char_entropy(

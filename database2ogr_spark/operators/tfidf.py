@@ -431,7 +431,6 @@ def tfidf_cosine_pairs(
     threshold: float = 0.3,
     max_df: int = 100,
     terms: str = "words",
-    release_cache: bool = True,
 ) -> DataFrame:
     """Sparse TF-IDF cosine similarity join: document pairs whose cosine
     over the ``df <= max_df`` TERM SUBSPACE reaches ``threshold`` — the
@@ -465,14 +464,11 @@ def tfidf_cosine_pairs(
     (id, term, wt) table is PERSISTED because four plan branches read
     it (pair sides a/b + both norm joins) and Spark does not share
     identical subtrees — without the persist the whole tf pipeline runs
-    four times (audited). Persist lifecycle follows the
-    operators/dedup.py convention: with ``release_cache=True`` (default)
-    the result is materialized via eager ``localCheckpoint`` and the
-    weighted table is unpersisted before returning, so no operator-owned
-    blocks outlive the call; pass ``release_cache=False`` for a fully
-    lazy plan (caller owns ``unpersist``/``clearCache``, as bench.py
-    does). Cosine is rounded 6 dp BEFORE the threshold compare, so the
-    cut is engine-stable.
+    four times (audited). The result leaves through
+    ``partitioning.finalize_lifecycle``: it is materialized via eager
+    ``localCheckpoint`` and the weighted table is unpersisted before
+    returning, so no operator-owned blocks outlive the call. Cosine is
+    rounded 6 dp BEFORE the threshold compare, so the cut is engine-stable.
 
     Output: (id_a, id_b, cosine), id_a < id_b.
     """
@@ -549,11 +545,7 @@ def tfidf_cosine_pairs(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    # single source of the persist-lifecycle convention (VERDICT r5 #9:
-    # no operator-owned blocks may outlive the call for non-bench callers)
-    from database2ogr_spark.operators.dedup import _finalize
-
-    return _finalize(result, weighted, release=release_cache)
+    return finalize_lifecycle(result, [weighted])
 
 
 def vocab_growth(

@@ -16,8 +16,9 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
 from __future__ import annotations
 
 import os
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "database2ogr_spark", master: str | None = None) -> SparkSession:
@@ -53,3 +54,43 @@ def get_spark(app_name: str = "database2ogr_spark", master: str | None = None) -
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def executed_plans(
+    spark: SparkSession, build: Callable[[], DataFrame]
+) -> tuple[DataFrame, list[str]]:
+    """Run ``build()`` and return ``(result, plans)``: the physical plan of
+    every SQL execution the call ran (eager jobs such as a
+    ``finalize_lifecycle`` checkpoint), oldest first, then the returned
+    DataFrame's ``executedPlan``.
+
+    Executions come from the SQL status store, which the listener bus fills
+    even with ``spark.ui.enabled=false``. Each is its final plan-graph node
+    descriptions, one per line: the one-line ``Exchange
+    hashpartitioning(...)`` form that ``explain`` prints, with each cached
+    plan under the ``InMemoryTableScan`` that reads it.
+    """
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    conv = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def tail(k: int) -> list:
+        # the store keeps the latest executions in id order and drops the
+        # oldest past spark.sql.ui.retainedExecutions, so new ones are a tail
+        n = store.executionsCount()
+        return list(conv.asJava(store.executionsList(max(n - k, 0), k)))
+
+    bus.waitUntilEmpty()
+    last = max((e.executionId() for e in tail(1)), default=-1)
+    result = build()
+    bus.waitUntilEmpty()
+    k = 16
+    while len(new := tail(k)) == k and new[0].executionId() > last:
+        k *= 4
+    plans = [
+        "\n".join(node.desc() for node in conv.asJava(store.planGraph(e.executionId()).allNodes()))
+        for e in new
+        if e.executionId() > last
+    ]
+    plans.append(result._jdf.queryExecution().executedPlan().toString())
+    return result, plans

@@ -1,15 +1,18 @@
-"""Round-11 optimization profiler: time individual headline queries with the
-noop sink (guide §1.4) and capture their ``explain("formatted")`` plans.
+"""Query profiler: time individual registry queries with the noop sink
+(guide §1.4) and capture the plans Spark executed for them.
 
 Usage:
     python scripts/profile_query.py [--passes N] [--plans-dir plans/r11] \
         [--tag before|after] query [query ...]
 
-Per query: builds the DataFrame, writes the formatted plan to
-``<plans-dir>/<query>_<tag>.txt`` (only when --tag given), then times
-``--passes`` noop-sink executions with blocking cache/block release between
-passes (the bench protocol), printing each pass and the min. Jobs are
-labelled via ``setJobDescription`` so the timeline is attributable.
+Per query: times ``--passes`` builds plus noop-sink executions, with
+blocking cache/block release between passes (the bench protocol), and
+prints each pass and the min. With ``--plans-dir`` and ``--tag``, the first
+pass runs under ``session.executed_plans`` and
+``<plans-dir>/<query>_<tag>.txt`` gets the physical plan of every SQL
+execution it ran (eager jobs during the build, then the noop write), read
+from Spark's SQL status store. Jobs are labelled via ``setJobDescription``
+so the timeline is attributable.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from bench import _release_all_blocks
-from database2ogr_spark.session import get_spark
+from database2ogr_spark.session import executed_plans, get_spark
 
 
 def main() -> None:
@@ -60,30 +63,28 @@ def main() -> None:
         if name not in qs:
             print(f"!! unknown query {name}")
             continue
-        if args.plans_dir and args.tag:
-            os.makedirs(args.plans_dir, exist_ok=True)
-            # capture the plan with lineage kept (persist-lifecycle
-            # operators otherwise checkpoint eagerly and explain() shows
-            # only Scan ExistingRDD); timings below run the real path
-            os.environ["D2O_KEEP_LINEAGE"] = "1"
-            try:
-                df = qs[name](spark, args.sf_dir)
-                plan = df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted")
-            finally:
-                os.environ.pop("D2O_KEEP_LINEAGE", None)
-            with open(os.path.join(
-                    args.plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
-                f.write(plan)
-            spark.catalog.clearCache()
-            _release_all_blocks(spark)
         times = []
+
+        def run():
+            t0 = time.perf_counter()
+            df = qs[name](spark, args.sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            times.append(time.perf_counter() - t0)
+            return df
+
         for p in range(args.passes):
             spark.sparkContext.setJobDescription(f"profile:{name}:pass{p}")
-            t0 = time.perf_counter()
-            qs[name](spark, args.sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            times.append(time.perf_counter() - t0)
+            if p == 0 and args.plans_dir and args.tag:
+                _, plans = executed_plans(spark, run)
+                os.makedirs(args.plans_dir, exist_ok=True)
+                with open(os.path.join(
+                        args.plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
+                    # the last entry is the returned DataFrame's own plan,
+                    # which the noop write re-planned and ran above
+                    for i, plan in enumerate(plans[:-1], 1):
+                        f.write(f"== execution {i}/{len(plans) - 1} ==\n{plan}\n")
+            else:
+                run()
             spark.catalog.clearCache()
             _release_all_blocks(spark)
             spark.sparkContext.setJobDescription(None)

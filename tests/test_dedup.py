@@ -537,8 +537,7 @@ def test_priority_survivors_key_domain(spark):
 
 
 def test_dedup_operators_release_intermediate_caches(spark):
-    """VERDICT r4 item 8: with the default ``release_cache=True``, each
-    pair operator unpersists its signature/gram intermediates before
+    """VERDICT r4 item 8: each pair operator unpersists its signature/gram intermediates before
     returning — after the action, the only persistent RDD added is the
     operator's own (small, result-sized) checkpoint, never the cached
     corpus-sized intermediate."""
@@ -585,16 +584,6 @@ def test_dedup_operators_release_intermediate_caches(spark):
         # at most the one checkpointed result; the MEMORY_AND_DISK
         # intermediates must be gone
         assert len(persistent_ids() - before) <= 1
-
-    # opt-out path: the legacy lazy contract still leaves the caller in
-    # charge (intermediate stays cached until clearCache). The cached
-    # intermediate is referenced by `lazy`'s plan, so the ContextCleaner
-    # cannot reclaim it while we hold the DataFrame.
-    before = persistent_ids()
-    lazy = minhash_lsh_pairs(df, threshold=0.5, release_cache=False)
-    lazy.count()
-    assert len(persistent_ids() - before) >= 1
-    spark.catalog.clearCache()
 
 
 def test_novelty_stats_exact_fractions(spark):
