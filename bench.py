@@ -6,7 +6,9 @@ bounded (<1.5 KB — the driver keeps a 2000-char stdout tail) JSON line:
 "full_timings": "BENCH_FULL_r{N}.json"}. The complete per-query dict is
 written to that repo sidecar file, which is the durable per-round record
 (the inline-everything format broke the driver parser in round 5 once the
-headline set reached 178 queries).
+headline set reached 178 queries). A run with $SPARK_GRAFT_CPUS below the
+CPUs the process may use is a scaling run and writes
+BENCH_FULL_r{N}_c{K}.json instead (see _full_sidecar).
 
 Each query is materialized with the no-op writer (full execution, no
 collect-to-driver skew in the timing). A warmup query initializes the JVM,
@@ -265,15 +267,7 @@ def _calibrate(spark, sf_dir: str) -> dict[str, float]:
     # risk, and a hard-coded pool size measures oversubscription on hosts
     # with fewer cores (ADVICE r9). Worker count is recorded so
     # cross-machine cpu_parallel_s comparisons stay meaningful.
-    # sched_getaffinity (ADVICE r10): os.cpu_count() reports host logical
-    # CPUs and ignores cgroup quotas / CPU affinity, so in a constrained
-    # container the pool would measure oversubscription — the very artifact
-    # the r9 fix targeted. The affinity mask is what the scheduler will
-    # actually grant this process.
-    try:
-        n_workers = len(os.sched_getaffinity(0))
-    except (AttributeError, OSError):  # non-Linux fallback
-        n_workers = os.cpu_count() or 16
+    n_workers = _usable_cpus()
     with mp.get_context("spawn").Pool(n_workers) as pool:
         # warm the pool OUTSIDE the timed window: spawn workers re-import
         # this module (and pyspark) at startup, which is process-creation
@@ -452,8 +446,10 @@ def main() -> None:
     # totals, the r01-set subtotal, counts, the 5 slowest queries, and the
     # worst-5 regression ratios vs the previous round's per-query data.
     repo = os.path.dirname(os.path.abspath(__file__))
-    this_round = _next_round(repo)
-    full_path = os.path.join(repo, f"BENCH_FULL_r{this_round:02d}.json")
+    this_round, full_name = _full_sidecar(
+        repo, os.environ.get("SPARK_GRAFT_CPUS"), _usable_cpus()
+    )
+    full_path = os.path.join(repo, full_name)
     with open(full_path, "w") as f:
         json.dump(
             {
@@ -481,7 +477,7 @@ def main() -> None:
             indent=1,
         )
 
-    prev = _prev_round_timings(repo, this_round)
+    prev = _prev_round_timings(repo, _next_round(repo))
     worst5_vs_prev = {}
     if prev:
         ratios = {
@@ -529,6 +525,31 @@ def main() -> None:
              "unit": "sec", "sf": sf}
         )
     print(line)
+
+
+def _usable_cpus() -> int:
+    """CPUs the scheduler will grant this process. os.cpu_count() reports
+    host logical CPUs and ignores cgroup quotas / CPU affinity, so in a
+    constrained container a pool sized by it measures oversubscription;
+    the affinity mask does not."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except (AttributeError, OSError):  # non-Linux fallback
+        return os.cpu_count() or 16
+
+
+def _full_sidecar(repo: str, cpus: str | None, usable: int) -> tuple[int, str]:
+    """(round, file name) of this run's per-query sidecar.
+
+    A run with ``SPARK_GRAFT_CPUS`` (``cpus``) below the ``usable`` CPUs is
+    a scaling run of the newest recorded round N: it writes
+    ``BENCH_FULL_r{N}_c{K}.json`` and neither takes nor moves the next
+    round's ``BENCH_FULL_r{N+1}.json`` slot. Every other run writes the
+    next round's sidecar."""
+    n = _next_round(repo)
+    if cpus and cpus.isdigit() and int(cpus) < usable:
+        return n - 1, f"BENCH_FULL_r{n - 1:02d}_c{int(cpus)}.json"
+    return n, f"BENCH_FULL_r{n:02d}.json"
 
 
 def _next_round(repo: str) -> int:

@@ -88,14 +88,6 @@ def coords_numbers(col: Column | str) -> Column:
     return F.regexp_extract_all(_c(col), F.lit(_NUM), 0)
 
 
-def _axis(col: Column | str, parity: int) -> Column:
-    nums = coords_numbers(col)
-    return F.filter(
-        F.transform(nums, lambda x: x.cast("double")),
-        lambda _x, i: i % 2 == F.lit(parity),
-    )
-
-
 def _envelope_fold(col: Column | str, finish) -> Column:
     """Single-pass envelope: one ``regexp_extract_all`` token scan feeds one
     ``aggregate`` that tracks min/max per lon/lat parity in its accumulator;
@@ -218,11 +210,6 @@ def kml_point(lon: Column, lat: Column) -> Column:
         lat.cast("string"),
         F.lit("</coordinates></Point>"),
     )
-
-
-def point_coords(col: Column | str) -> Column:
-    """``array<double>[lon, lat]`` of a Point geometry."""
-    return F.from_json(_c(col), _POINT_SCHEMA).getField("coordinates")
 
 
 def coords_key(col: Column | str) -> Column:

@@ -179,31 +179,6 @@ def minhash_member(s1: Column, s2: Column, coeff: tuple[int, int, int]) -> Colum
     return (F.lit(a) * s1 + F.lit(b) * s2 + F.lit(c)) % MINHASH_P
 
 
-def minhash_signature(shingle_struct_col: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as a pure in-row expression → array<bigint>, over a
-    :func:`shingle_structs_of` array (stage the word hashes first — see that
-    function's warning).
-
-    Same family as ``operators/dedup.minhash_signatures`` (affine maps of the
-    rolling shingle hashes, see :func:`minhash_coeffs`), so the two forms
-    produce identical signatures. Evaluated per row on executors; the LSH
-    banding join happens in ``operators/dedup.py``. Empty shingle arrays
-    yield NULL mins.
-    """
-    coeffs = minhash_coeffs(num_hashes)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    shingle_struct_col,
-                    lambda s, c=c: minhash_member(s["s1"], s["s2"], c),
-                )
-            )
-            for c in coeffs
-        ]
-    )
-
-
 def simhash64(token_col: Column) -> Column:
     """64-bit SimHash over a token array.
 

@@ -37,11 +37,6 @@ def whitespace_token_count(col: Column | str) -> Column:
     return F.size(words(col))
 
 
-def regex_token_count(col: Column | str) -> Column:
-    """Token count under the BPE-ish regex (letters/digits/symbols)."""
-    return F.size(F.regexp_extract_all(_c(col), F.lit(TOKEN_RE), 0))
-
-
 def stopword_hits(col: Column | str, lang: str) -> Column:
     """Number of tokens that are stopwords of ``lang``."""
     sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])

@@ -834,8 +834,8 @@ def u_shaped_attribution(
     a sort for position/count, and a #types-key rollup.
 
     Time-domain contract: deliberately OUTSIDE cleaning.within_time_domain
-    (see the _TIME_DOMAIN_TWINS note in __spark_entry__): touches are
-    only ORDERED by ts, never truncated or bucketed by it, so an
+    (its registry entry in __spark_entry__ carries no time_domain flag):
+    touches are only ORDERED by ts, never truncated or bucketed by it, so an
     implausible timestamp cannot corrupt a key; dropping it would
     silently remove a touch from the credit split. Symmetry with the
     unguarded oracle twin is probed by

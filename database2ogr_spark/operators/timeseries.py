@@ -51,8 +51,8 @@ def range_join(
     exploded interval side is small, skew-split when a bucket is hot.
 
     Time-domain contract: deliberately OUTSIDE cleaning.within_time_domain
-    (see the _TIME_DOMAIN_TWINS note in __spark_entry__): the EVENT side
-    takes exactly one bucket per row regardless of how implausible its
+    (its registry entry in __spark_entry__ carries no time_domain flag):
+    the EVENT side takes exactly one bucket per row regardless of how implausible its
     timestamp is (floor of a negative epoch is still one bucket), so
     there is no data-dependent fan-out to guard on the big table; the
     fan-out lives on the caller-provided INTERVAL side, whose

@@ -41,11 +41,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 import bench as benchmod
+from database2ogr_spark.schemas import TESTDATA_TABLES as TABLES
 from database2ogr_spark.session import get_spark
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def complex_typed_cols(schema) -> list[str]:

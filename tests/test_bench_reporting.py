@@ -8,6 +8,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
@@ -30,6 +32,21 @@ def test_next_round_rerun_overwrites_own_sidecar(tmp_path):
 
 def test_next_round_empty_repo(tmp_path):
     assert bench._next_round(str(tmp_path)) == 1
+
+
+@pytest.mark.parametrize(
+    "cpus,want",
+    [
+        # a scaling run files under the newest recorded round
+        ("8", (12, "BENCH_FULL_r12_c8.json")),
+        # a run on every usable CPU takes the next round's slot
+        ("32", (13, "BENCH_FULL_r13.json")),
+        (None, (13, "BENCH_FULL_r13.json")),
+    ],
+)
+def test_full_sidecar_names_scaling_runs(tmp_path, cpus, want):
+    (tmp_path / "BENCH_r12.json").write_text("{}")
+    assert bench._full_sidecar(str(tmp_path), cpus, 32) == want
 
 
 def test_prev_timings_prefers_full_sidecar(tmp_path):

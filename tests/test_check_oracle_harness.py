@@ -154,10 +154,9 @@ def test_dtype_gate_timestamp_ntz_is_datetime(spark):
 
 
 def test_every_registry_entry_has_an_oracle_twin():
-    """278/278 as of round 6: no ROWS-ONLY entries remain — every
-    queries() entry is hash-gradeable against DuckDB. New entries must
-    ship with a twin (or consciously delete this invariant, which is the
-    point of the test)."""
+    """No ROWS-ONLY entries: every queries() entry is hash-gradeable
+    against DuckDB. ``register`` requires a twin, so this holds by
+    construction; the test keeps the invariant visible."""
     import __spark_entry__ as entrymod
 
     qs = set(entrymod.queries())
@@ -165,11 +164,37 @@ def test_every_registry_entry_has_an_oracle_twin():
     assert qs <= oracles, sorted(qs - oracles)
 
 
+def test_queries_and_oracle_sql_share_one_order():
+    """Both readers walk the same registry order, so the twin list lines
+    up with the engine list entry for entry."""
+    import __spark_entry__ as entrymod
+
+    assert list(entrymod.queries()) == list(entrymod.oracle_sql())
+
+
+def test_registry_order_check_rejects_missing_extra_and_duplicate():
+    """The import-time order check names every unlisted, unregistered and
+    repeated entry instead of silently dropping or double-listing it."""
+    import pytest
+
+    import __spark_entry__ as entrymod
+
+    check = entrymod._check_order
+    registered = {"a": None, "b": None}
+    check(("a", "b"), registered)
+    with pytest.raises(ValueError, match=r"unlisted=\['b'\]"):
+        check(("a",), registered)
+    with pytest.raises(ValueError, match=r"unregistered=\['c'\]"):
+        check(("a", "b", "c"), registered)
+    with pytest.raises(ValueError, match=r"duplicate=\['a'\]"):
+        check(("a", "b", "a"), registered)
+
+
 #: The shipped round-11 prefix, band by band. The boundaries are
 #: load-bearing: the driver grades exactly slots 1-50, and the band
 #: arithmetic (3+37+5+3+2 = 50) is what makes the next rotation a pure
-#: cut at slot 50. Update ONLY together with the rotation docstring in
-#: queries().
+#: cut at slot 50. Update ONLY together with ``_QUERY_ORDER`` in
+#: __spark_entry__.py.
 R11_PRIORITY = [
     # (a) streaming_dedup: watermark now corpus-derived (ADVICE r10 #2),
     # stream reader nanos fallback (ADVICE r10 #1);
@@ -268,7 +293,7 @@ def test_registry_is_282_post_freeze():
     round-11 additions: streaming_dedup_evicting (deterministic
     bounded-state eviction grading) and decontaminate_semantic_lsh (the
     banded-LSH semantic-decontamination scale tier). Update this count
-    together with the rotation docstring."""
+    together with ``_QUERY_ORDER``."""
     import __spark_entry__ as entrymod
 
     assert len(entrymod.queries()) == 282
@@ -292,10 +317,15 @@ def test_embedding_validity_view_covers_every_embeddings_scan():
         )
 
 
+def _time_domain_names(entrymod) -> list[str]:
+    return [n for n, e in entrymod._REGISTRY.items() if e.time_domain]
+
+
 def test_time_domain_view_covers_every_listed_twin():
-    """Mirror pin for the event-time domain contract: every twin named
-    in _TIME_DOMAIN_TWINS reads events ONLY through the [1970, 2100)
-    domain view (oracle side of cleaning.within_time_domain)."""
+    """Mirror pin for the event-time domain contract: every twin whose
+    entry is registered with ``time_domain=True`` reads events ONLY
+    through the [1970, 2100) domain view (oracle side of
+    cleaning.within_time_domain)."""
     import re
 
     import __spark_entry__ as entrymod
@@ -305,8 +335,9 @@ def test_time_domain_view_covers_every_listed_twin():
         "AND ts < TIMESTAMP '2100-01-01 00:00:00'"
     )
     o = entrymod.oracle_sql()
-    assert len(entrymod._TIME_DOMAIN_TWINS) == 35  # +streaming_dedup_evicting (r11)
-    for name in entrymod._TIME_DOMAIN_TWINS:
+    names = _time_domain_names(entrymod)
+    assert len(names) == 35
+    for name in names:
         stripped = o[name].replace(view, "")
         assert not re.search(r"FROM events\b", stripped), (
             f"{name}: events scan outside the time-domain view"
@@ -335,9 +366,9 @@ def test_events_domain_rewrite_is_table_name_anchored():
     # 3) whitelisted alias is preserved
     got = rewrite("SELECT e.ts FROM events e JOIN t ON 1=1")
     assert got == f"SELECT e.ts FROM ({ts_view}) e JOIN t ON 1=1"
-    # 4) oracle_sql() routes every listed twin through THIS helper
+    # 4) oracle_sql() routes every flagged twin through THIS helper
     o = entrymod.oracle_sql()
-    for name in entrymod._TIME_DOMAIN_TWINS:
+    for name in _time_domain_names(entrymod):
         assert f"({ts_view})" in o[name], name
 
 

@@ -87,6 +87,51 @@ def test_narrow_ops_prune_and_never_shuffle(spark, name, cols):
         ("cap_per_domain", 1),
         # store fingerprints + in-batch winners + admit join
         ("dedup_incremental", 3),
+        # counts agg (appears in both the rates and the normalizer branch;
+        # rows = #sources either way); rates come back broadcast; fan-out
+        # is narrow
+        ("temperature_resample", 2),
+        # token-count agg + the vocabulary-sized rank exchange
+        ("build_vocab", 2),
+        # one ROLLUP grouping-sets exchange
+        ("hypertable_rollup", 1),
+        # token counts + prob join + per-doc mean
+        ("unigram_logprob", 3),
+        # (group, day) count + per-group bounds + spine join + final agg:
+        # group-keyed shuffles; AQE broadcasts the tiny post-agg sides
+        ("trend_slope", 3),
+        # day count + spine join + horizon fan-out re-agg + final join
+        ("ewma_volume", 3),
+        # one source-mass agg + the #groups-row rank window
+        ("concentration", 2),
+        # day count + spine + lag fan-out re-agg (+ 1-row stats broadcast)
+        ("acf", 3),
+        # the ONE stratum-partitioned window shuffle
+        ("kfold", 1),
+        # day count + spine + 1-row quantile agg broadcast back
+        ("iqr_anomaly_days", 3),
+        # the corpus-sized work is the ONE persisted (type,user)
+        # distinct (InMemoryTableScan reuse pinned below); the other
+        # exchanges move #types- and #users-distinct-row tables only
+        ("audience_overlap", 8),
+        # block-matmul pair kernel (one B-replicated shuffle) + explode
+        # count + node left join
+        ("embedding_density", 4),
+        # the static plan repeats the persisted distinct's subtree per
+        # reference (4 InMemoryRelation scans — pinned below); at
+        # runtime the corpus-sized distinct executes ONCE and the other
+        # exchanges move #weeks-row tables
+        ("churn", 7),
+        # lag flag + running index share one user sort; per-session agg
+        ("session_stats", 3),
+        # (week,dim) count + spine join + per-dim lag window + totals
+        ("wow_decomposition", 4),
+        # user agg + (user,type) count + champion join
+        ("user_features", 4),
+        # one label-keyed count + the 1-row normalizer agg
+        ("class_weights", 2),
+        # ONE conditional-sum pass, no per-level scans
+        ("nested_subsets", 0),
     ],
 )
 def test_shuffle_budgets(spark, name, max_shuffles):
@@ -155,27 +200,6 @@ def test_semantic_dedup_single_cluster_shuffle(spark):
     n = _n_shuffles(plan)
     assert n <= 1, f"{n} shuffles\n{plan}"
     spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize(
-    "name,max_shuffles",
-    [
-        # counts agg (appears in both the rates and the normalizer branch;
-        # rows = #sources either way); rates come back broadcast; fan-out
-        # is narrow
-        ("temperature_resample", 2),
-        # token-count agg + the vocabulary-sized rank exchange
-        ("build_vocab", 2),
-        # one ROLLUP grouping-sets exchange
-        ("hypertable_rollup", 1),
-        # token counts + prob join + per-doc mean
-        ("unigram_logprob", 3),
-    ],
-)
-def test_round4_shuffle_budgets(spark, name, max_shuffles):
-    plan = _plan(spark, name)
-    n = _n_shuffles(plan)
-    assert n <= max_shuffles, f"{name}: {n} shuffles (budget {max_shuffles})\n{plan}"
 
 
 def test_duplicate_spans_shuffle_budget(spark):
@@ -566,30 +590,6 @@ def test_ks_test_histogram_before_window(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-@pytest.mark.parametrize(
-    "name,max_shuffles",
-    [
-        # (group, day) count + per-group bounds + spine join + final agg:
-        # group-keyed shuffles; AQE broadcasts the tiny post-agg sides
-        ("trend_slope", 3),
-        # day count + spine join + horizon fan-out re-agg + final join
-        ("ewma_volume", 3),
-        # one source-mass agg + the #groups-row rank window
-        ("concentration", 2),
-        # day count + spine + lag fan-out re-agg (+ 1-row stats broadcast)
-        ("acf", 3),
-        # the ONE stratum-partitioned window shuffle
-        ("kfold", 1),
-        # day count + spine + 1-row quantile agg broadcast back
-        ("iqr_anomaly_days", 3),
-    ],
-)
-def test_round5_timeseries_shuffle_budgets(spark, name, max_shuffles):
-    plan = _plan(spark, name)
-    n = _n_shuffles(plan)
-    assert n <= max_shuffles, f"{name}: {n} shuffles (budget {max_shuffles})\n{plan}"
-
-
 def test_audience_overlap_distinct_is_cached_once(spark):
     # the (type,user) distinct must be persisted and reused by every
     # branch — without it the corpus distinct re-executed per branch
@@ -603,50 +603,6 @@ def test_kfold_scan_prunes_to_needed_columns(spark):
     for schema in _read_schemas(plan):
         got = {c.split(":")[0] for c in schema.split(",")}
         assert got <= {"doc_id", "lang"}, schema
-
-
-@pytest.mark.parametrize(
-    "name,max_shuffles",
-    [
-        # the corpus-sized work is the ONE persisted (type,user)
-        # distinct (InMemoryTableScan reuse pinned below); the other
-        # exchanges move #types- and #users-distinct-row tables only
-        ("audience_overlap", 8),
-        # block-matmul pair kernel (one B-replicated shuffle) + explode
-        # count + node left join
-        ("embedding_density", 4),
-    ],
-)
-def test_round5_events_embedding_budgets(spark, name, max_shuffles):
-    plan = _plan(spark, name)
-    n = _n_shuffles(plan)
-    assert n <= max_shuffles, f"{name}: {n} shuffles (budget {max_shuffles})\n{plan}"
-
-
-@pytest.mark.parametrize(
-    "name,max_shuffles",
-    [
-        # the static plan repeats the persisted distinct's subtree per
-        # reference (4 InMemoryRelation scans — pinned below); at
-        # runtime the corpus-sized distinct executes ONCE and the other
-        # exchanges move #weeks-row tables
-        ("churn", 7),
-        # lag flag + running index share one user sort; per-session agg
-        ("session_stats", 3),
-        # (week,dim) count + spine join + per-dim lag window + totals
-        ("wow_decomposition", 4),
-        # user agg + (user,type) count + champion join
-        ("user_features", 4),
-        # one label-keyed count + the 1-row normalizer agg
-        ("class_weights", 2),
-        # ONE conditional-sum pass, no per-level scans
-        ("nested_subsets", 0),
-    ],
-)
-def test_round5_batch35_shuffle_budgets(spark, name, max_shuffles):
-    plan = _plan(spark, name)
-    n = _n_shuffles(plan)
-    assert n <= max_shuffles, f"{name}: {n} shuffles (budget {max_shuffles})\n{plan}"
 
 
 def test_churn_distinct_is_cached_once(spark):
