@@ -9716,12 +9716,13 @@ def _ates_catalog(spark: SparkSession) -> Catalog:
     the driver's sf dirs don't carry them; this exercises the reference's
     actual schema end-to-end."""
     global _ATES_DIR
+    from database2ogr_spark.schemas import ATES_SCHEMAS
     from database2ogr_spark.sources.fixtures import write_ates_fixtures
 
     if _ATES_DIR is None:
         _ATES_DIR = _tmp("d2o_ates_fixtures")
         write_ates_fixtures(spark, _ATES_DIR)
-    return Catalog(spark, _ATES_DIR)
+    return Catalog(spark, _ATES_DIR, ATES_SCHEMAS)
 
 
 # golden structural oracles for the ATES fixture pipeline (area 1):
@@ -9747,11 +9748,11 @@ def q_ates_geojson_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     total serialized length) so the deterministic fixture pipeline gets a
     hard literal-VALUES oracle; byte-exact documents stay golden-tested in
     tests/test_ates_pipeline.py."""
-    from database2ogr_spark.plans.area_export import _apply_warnify, build_table_dfs
+    from database2ogr_spark.plans.area_export import build_table_dfs
     from database2ogr_spark.sinks.geojson import with_feature
 
     cat = _ates_catalog(spark)
-    table_dfs = _apply_warnify(build_table_dfs(cat, 1, "GeoJSON"), html=False)
+    table_dfs = build_table_dfs(cat, 1, "GeoJSON")
     per_table = [
         with_feature(df).agg(
             F.lit(tbl).alias("tbl"),
@@ -9779,10 +9780,10 @@ def q_ates_kml_placemarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     warnify HTML popup, KML geometry serialization), reduced to a per-table
     structural summary with a literal-VALUES oracle (byte-exact KML is
     golden-tested in tests/test_ates_pipeline.py)."""
-    from database2ogr_spark.plans.area_export import _apply_warnify, build_table_dfs
+    from database2ogr_spark.plans.area_export import build_table_dfs
 
     cat = _ates_catalog(spark)
-    table_dfs = _apply_warnify(build_table_dfs(cat, 1, "KML"), html=True)
+    table_dfs = build_table_dfs(cat, 1, "KML")
     per_table = [
         df.select(placemark_xml(df).alias("placemark")).agg(
             F.lit(tbl).alias("tbl"),

@@ -13,11 +13,16 @@ Scale notes:
   so the join never shuffles the parent.
 - predicates are plain Column expressions → pushed into the parquet/JDBC scan
   (verify via ``PushedFilters`` in ``.explain("formatted")``).
+- queries are immutable; building their Columns (``columns``,
+  ``predicate``) is separate from applying them to a scan (``bind``), so
+  the Columns of a fixed query set are built once and reused per request
+  (``plans/area_export``).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from collections.abc import Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -50,8 +55,31 @@ def bind_param(expr: str, param: object | None, table: str) -> str:
     return expr.replace("{param}", bound)
 
 
-@dataclass
-class Query:
+class _Scan:
+    """What :class:`Query` and :class:`JoinQuery` share: the split between
+    building Columns (``columns``, ``predicate``) and applying them to one
+    scan (``bind``). Built Columns hold no data and no area, so a server can
+    build them once and bind them to every request's scan."""
+
+    table: str
+    where: str | None
+
+    def predicate(self, param: object | None) -> Column | None:
+        """The WHERE with ``param`` bound as the reference's ``$1`` (F1);
+        None when the query has no WHERE (F3 full scan, reference
+        ``src/mapboxing.js:70-74``)."""
+        if self.where is None:
+            return None
+        return F.expr(bind_param(self.where, param, self.table))
+
+    def build(self, catalog: Catalog, param: object | None = None) -> DataFrame:
+        """Resolve to a DataFrame: bind ``param`` and this query's Columns
+        to a fresh scan."""
+        return self.bind(catalog, self.predicate(param), self.columns())
+
+
+@dataclass(frozen=True)
+class Query(_Scan):
     """One table's export query.
 
     Mirrors the reference constructor signature
@@ -62,19 +90,15 @@ class Query:
     """
 
     table: str
-    non_geometry_columns: list[str]
+    non_geometry_columns: Sequence[str]
     where: str | None = None  # SQL boolean expr with {param} placeholder
-    ogr_type: str = "GeoJSON"  # 'GeoJSON' | 'KML' | None (no geometry output)
+    ogr_type: str | None = "GeoJSON"  # 'GeoJSON' | 'KML' | None (no geometry output)
     bounding_box: bool = False
     geometry_column: str | None = GEOMETRY_COLUMN
 
-    def build(self, catalog: Catalog, param: object | None = None) -> DataFrame:
-        """Resolve to a DataFrame. ``param`` binds the reference's ``$1``
-        (area id) into the predicate (F1); ``where=None`` → full scan (F3,
-        reference ``src/mapboxing.js:70-74``)."""
-        df = catalog.table(self.table)
-        if self.where is not None:
-            df = df.filter(self._predicate(param))
+    def columns(self) -> list[Column]:
+        """The projection: non-geometry columns (P1), serialized geometry
+        (P2), bounding box (P3) and the constant table tag (P5)."""
         cols: list[Column] = [F.col(c) for c in self.non_geometry_columns]
         if self.geometry_column is not None and self.ogr_type is not None:
             cols.append(self._geometry_expr().alias("geometry"))
@@ -83,10 +107,16 @@ class Query:
         # P5 — constant table tag merged into every row
         # (reference src/from-ground-up.js:134, :449).
         cols.append(F.lit(self.table).alias("table"))
-        return df.select(*cols)
+        return cols
 
-    def _predicate(self, param: object | None) -> Column:
-        return F.expr(bind_param(self.where, param, self.table))
+    def bind(
+        self, catalog: Catalog, predicate: Column | None, columns: Sequence[Column]
+    ) -> DataFrame:
+        """Scan the table, filter on ``predicate`` (if any), project ``columns``."""
+        df = catalog.table(self.table)
+        if predicate is not None:
+            df = df.filter(predicate)
+        return df.select(*columns)
 
     def _geometry_expr(self) -> Column:
         # P2 — geometry serialization dispatch (reference
@@ -97,8 +127,8 @@ class Query:
         return F.col(self.geometry_column)
 
 
-@dataclass
-class JoinQuery:
+@dataclass(frozen=True)
+class JoinQuery(_Scan):
     """Parent ⋈ child inner equi-join (J1) with post-join filter (F2).
 
     Reference semantics (``src/from-ground-up.js:102-123``): projection is the
@@ -114,20 +144,12 @@ class JoinQuery:
     where: str | None = None  # post-join predicate on parent cols
     broadcast_child: bool = True
 
-    table: str = field(init=False)
+    @property
+    def table(self) -> str:
+        return self.parent.table
 
-    def __post_init__(self) -> None:
-        self.table = self.parent.table
-
-    def build(self, catalog: Catalog, param: object | None = None) -> DataFrame:
-        p = catalog.table(self.parent.table).alias("p")
-        c = catalog.table(self.child.table).alias("c")
-        if self.broadcast_child:
-            c = F.broadcast(c)
-        pk, ck = self.on
-        joined = p.join(c, F.col(f"p.{pk}") == F.col(f"c.{ck}"), "inner")
-        if self.where is not None:
-            joined = joined.filter(F.expr(bind_param(self.where, param, self.table)))
+    def columns(self) -> list[Column]:
+        """The projection over the ``p``/``c`` aliases of :meth:`bind`."""
         cols: list[Column] = [F.col(f"p.{col}") for col in self.parent.non_geometry_columns]
         cols += [F.col(f"c.{col}") for col in self.child.non_geometry_columns]
         geom_source = self.parent if self.parent.geometry_column else self.child
@@ -141,4 +163,19 @@ class JoinQuery:
             if self.parent.bounding_box:
                 cols.append(G.envelope_geojson(geo).alias("bounding_box"))
         cols.append(F.lit(self.table).alias("table"))
-        return joined.select(*cols)
+        return cols
+
+    def bind(
+        self, catalog: Catalog, predicate: Column | None, columns: Sequence[Column]
+    ) -> DataFrame:
+        """Join the two scans, filter on ``predicate`` (if any) after the
+        join, project ``columns``."""
+        p = catalog.table(self.parent.table).alias("p")
+        c = catalog.table(self.child.table).alias("c")
+        if self.broadcast_child:
+            c = F.broadcast(c)
+        pk, ck = self.on
+        joined = p.join(c, F.col(f"p.{pk}") == F.col(f"c.{ck}"), "inner")
+        if predicate is not None:
+            joined = joined.filter(predicate)
+        return joined.select(*columns)

@@ -25,6 +25,8 @@ No UDAF needed (SURVEY.md §2.11).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -50,9 +52,24 @@ def pivoted_warning_lists(warning: Column, wtype: Column) -> list[Column]:
     return out
 
 
-def warnify(
-    df: DataFrame,
+@dataclass(frozen=True, eq=False)
+class Grouping:
+    """The Columns of one warnify configuration: group key, aggregates and
+    output projection. They hold no data, so one Grouping applies to any
+    number of joined DataFrames (``plans/area_export`` builds one per
+    catalog and document kind and applies it to every request)."""
+
+    key: Column
+    aggs: tuple[Column, ...]
+    out: tuple[Column, ...]
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        return df.groupBy(self.key).agg(*self.aggs).select(*self.out)
+
+
+def warnify_columns(
     *,
+    warnings: str = "json",
     carry_cols: tuple[str, ...] = ("id", "name", "area_id", "comments"),
     warning_col: str = "warning",
     type_col: str = "type",
@@ -60,36 +77,53 @@ def warnify(
     key_col: str | None = None,
     rebuild_point: bool = True,
     geometry_format: str = "geojson",
-) -> DataFrame:
+) -> Grouping:
+    """Build the Columns of one warnify configuration. Holds the single
+    authoritative copy of the pinned grouping semantics (module docstring
+    (a)-(c)); ``warnings`` picks the serialization of the pivoted lists:
+    ``"json"`` (:func:`warnify`), ``"html"`` (:func:`warnify_html`) or
+    ``"lists"`` (:func:`warnify_raw`, the two array columns
+    ``managing_risk`` and ``concern``)."""
+    key = F.col(key_col) if key_col else G.coords_key(geometry_col)
+    aggs = (
+        *pivoted_warning_lists(F.col(warning_col), F.col(type_col)),
+        *[F.min(c).alias(c) for c in carry_cols],
+        F.min("table").alias("table"),
+    )
+    geometry = _rebuild_point(geometry_format) if rebuild_point else F.col("__key")
+    out = [F.col(c) for c in (*carry_cols, "table")] + [geometry.alias("geometry")]
+    if warnings == "lists":
+        out = [F.col("managing_risk"), F.col("concern"), *out]
+    elif warnings == "json":
+        out.append(_warnings_json().alias("warnings"))
+    elif warnings == "html":
+        out.append(_warnings_html().alias("warnings"))
+    else:
+        raise ValueError(f"warnings must be json, html or lists, not {warnings!r}")
+    return Grouping(key.alias("__key"), aggs, tuple(out))
+
+
+def warnify(df: DataFrame, **kwargs) -> DataFrame:
     """Collapse joined (decision_point x warning) rows to one row per point.
 
-    Output columns: carry_cols (MIN-aggregated), ``warnings`` (JSON string
-    ``{"managing-risk":[...],"concern":[...]}`` — the reference's
-    ``flatten_warnings = JSON.stringify``, ``src/from-ground-up.js:222``),
-    ``geometry`` (Point rebuilt from the group key, ``:266-277``), ``table``.
+    Output columns: carry_cols (MIN-aggregated), ``table``, ``geometry``
+    (Point rebuilt from the group key, ``src/from-ground-up.js:266-277``),
+    ``warnings`` (JSON string ``{"managing-risk":[...],"concern":[...]}`` —
+    the reference's ``flatten_warnings = JSON.stringify``,
+    ``src/from-ground-up.js:222``). Keyword arguments as
+    :func:`warnify_columns`.
     """
-    # single source of grouping semantics: warnify_raw (same pinned contract
-    # serves both serializations — JSON here, HTML in warnify_html)
-    base = warnify_raw(
-        df,
-        carry_cols=carry_cols,
-        warning_col=warning_col,
-        type_col=type_col,
-        geometry_col=geometry_col,
-        key_col=key_col,
-        geometry_format=geometry_format,
-        rebuild_point=rebuild_point,
-    )
+    return warnify_columns(warnings="json", **kwargs).apply(df)
+
+
+def _warnings_json() -> Column:
     # A4 — warnings map → JSON string; struct field order fixes key order to
     # {"managing-risk":[...],"concern":[...]} like the reference.
-    warnings_json = F.to_json(
+    return F.to_json(
         F.struct(
             F.col("managing_risk").alias("managing-risk"),
             F.col("concern").alias("concern"),
         )
-    )
-    return base.withColumn("warnings", warnings_json).drop(
-        "managing_risk", "concern"
     )
 
 
@@ -118,15 +152,16 @@ _POPUP_META = (
 
 def warnify_html(df: DataFrame, **kwargs) -> DataFrame:
     """KML variant (A5): warnings rendered as the reference's orange-table
-    HTML popup (``src/from-ground-up.js:507-529``) — Concern checklist first
-    (red ✗), then Managing risk (green), wrapped in the CSS popup header.
-    The surrounding (slightly malformed) tr/tbody shape is reproduced exactly
-    for golden parity. Same grouping as :func:`warnify`; only serialization
-    differs.
-    """
-    from database2ogr_spark.functions.text import unescape_quotes
+    HTML popup (``src/from-ground-up.js:507-529``). Same grouping as
+    :func:`warnify`; only serialization differs."""
+    return warnify_columns(warnings="html", **kwargs).apply(df)
 
-    base = warnify_raw(df, **kwargs)
+
+def _warnings_html() -> Column:
+    """The popup: Concern checklist first (red ✗), then Managing risk
+    (green), wrapped in the CSS popup header. The surrounding (slightly
+    malformed) tr/tbody shape is reproduced exactly for golden parity."""
+    from database2ogr_spark.functions.text import unescape_quotes
 
     def checklist(col: Column, bullet: str) -> Column:
         return F.array_join(
@@ -148,30 +183,11 @@ def warnify_html(df: DataFrame, **kwargs) -> DataFrame:
         checklist(F.col("managing_risk"), "green-check"),
         F.lit("<tr></tbody></table>"),
     )
-    html = F.concat(F.lit(_POPUP_META), table)
-    return base.withColumn("warnings", html).drop("managing_risk", "concern")
+    return F.concat(F.lit(_POPUP_META), table)
 
 
-def warnify_raw(
-    df: DataFrame,
-    *,
-    carry_cols: tuple[str, ...] = ("id", "name", "area_id", "comments"),
-    warning_col: str = "warning",
-    type_col: str = "type",
-    geometry_col: str = "geometry",
-    key_col: str | None = None,
-    geometry_format: str = "geojson",
-    rebuild_point: bool = True,
-) -> DataFrame:
+def warnify_raw(df: DataFrame, **kwargs) -> DataFrame:
     """Like :func:`warnify` but keeps the pivoted lists as array columns
-    (``managing_risk``, ``concern``) for callers that serialize differently
-    (HTML for KML, JSON for GeoJSON). Holds the single authoritative copy of
-    the pinned grouping semantics (module docstring (a)-(c))."""
-    key = F.col(key_col) if key_col else G.coords_key(geometry_col)
-    grouped = df.groupBy(key.alias("__key")).agg(
-        *pivoted_warning_lists(F.col(warning_col), F.col(type_col)),
-        *[F.min(c).alias(c) for c in carry_cols],
-        F.min("table").alias("table"),
-    )
-    geometry = _rebuild_point(geometry_format) if rebuild_point else F.col("__key")
-    return grouped.withColumn("geometry", geometry).drop("__key")
+    (``managing_risk``, ``concern``) for callers that serialize
+    differently."""
+    return warnify_columns(warnings="lists", **kwargs).apply(df)

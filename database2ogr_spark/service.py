@@ -11,21 +11,30 @@ Content-Disposition the reference sets via ``res.attachment(name)``
 (``src/from-ground-up.js:969, :994``).
 
 Scale note: per-request Spark work is the reference's own model (one
-document per request). A request's document costs one guarded count plus one
-collect over its six tables, with section order pinned on the driver
-(``sinks.geojson.collect_sections``). A production deployment would put this
-behind a queue or pre-materialize per-area KMZs with one distributed job
+document per request). The expression trees of a document (queries,
+geometry serialization, warnify, placemark rendering) are built on the
+first request and shared by every later one, on any thread
+(``plans.area_export``). A request only reads the tables, binds its area
+and runs one guarded count plus one collect over its six sections, with
+section order pinned on the driver (``sinks.geojson.collect_sections``).
+Data is read at request time, so a request sees the tables as they are
+then. The KMZ archive is built in memory. A production deployment would put this behind a queue or
+pre-materialize per-area KMZs with one distributed job
 (``export_ndjson``-style) and serve statically.
 """
 
 from __future__ import annotations
 
-import os
+import io
+import logging
 import re
-import tempfile
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 _ROUTE = re.compile(r"^/(?P<lang>[^/]+)/(?P<area_id>\d+)\.kmz$")
+
+_log = logging.getLogger(__name__)
+
+_ERROR = b"internal error: the KMZ export failed\n"
 
 _HELP = (
     "usage: GET /<lang>/<areaId>.kmz — lang in {en, fr} (default en)\n"
@@ -64,19 +73,19 @@ def make_handler(catalog, export_kmz=None):
             area_id = int(m.group("area_id"))
             lang = m.group("lang")
             try:
-                # TemporaryDirectory cleans up after the body is read — a
-                # long-lived server must not leak one dir per request
-                with tempfile.TemporaryDirectory() as d:
-                    out = os.path.join(d, f"area{area_id}.kmz")
-                    export_kmz(catalog, area_id, out, lang=lang)
-                    with open(out, "rb") as fh:
-                        body = fh.read()
-            except Exception as e:  # engine failure → 500, not a hung socket
-                msg = str(e).encode()[:500]
+                # the archive is built in memory: no temp file per request
+                buf = io.BytesIO()
+                export_kmz(catalog, area_id, buf, lang=lang)
+                body = buf.getvalue()
+            except Exception:  # engine failure → 500, not a hung socket
+                # the engine's message (file paths, plan text) stays in the
+                # server log; the client gets a fixed body
+                _log.exception("KMZ export failed for %s", self.path)
                 self.send_response(500)
-                self.send_header("Content-Length", str(len(msg)))
+                self.send_header("Content-Type", "text/plain; charset=utf-8")
+                self.send_header("Content-Length", str(len(_ERROR)))
                 self.end_headers()
-                self.wfile.write(msg)
+                self.wfile.write(_ERROR)
                 return
             self.send_response(200)
             self.send_header("Content-Type", "application/vnd.google-earth.kmz")

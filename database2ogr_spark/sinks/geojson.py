@@ -4,7 +4,8 @@
 geometry is spliced in verbatim (it is already GeoJSON text), properties are
 ``to_json`` of the remaining columns with the special columns removed (P6
 column hoist/drop, reference ``src/from-ground-up.js:196-199``), tagged with
-the source table (reference ``:205-206``).
+the source table (reference ``:205-206``). It depends only on the column
+names, so ``with_feature`` builds it once per table shape.
 
 Scale stance: the one-file ``FeatureCollection`` (K1) is inherently
 driver-bound — the reference builds it in memory (``src/from-ground-up.js:
@@ -20,6 +21,7 @@ from __future__ import annotations
 
 import functools
 import os
+from collections.abc import Sequence
 from operator import itemgetter
 
 from pyspark.sql import Column, DataFrame, Row
@@ -30,8 +32,11 @@ from pyspark.sql import functions as F
 SPECIAL = ("geometry", "bounding_box")
 
 
-def feature_json(df: DataFrame, *, drop: tuple[str, ...] = ()) -> Column:
-    """Feature document string: ``{"type":"Feature","geometry":...,
+def feature_json(
+    columns: DataFrame | Sequence[str], *, drop: tuple[str, ...] = ()
+) -> Column:
+    """Feature document string for rows with these columns (a DataFrame
+    stands for its own): ``{"type":"Feature","geometry":...,
     ["bounding_box":...,] "properties":{...}}``.
 
     Property bag = all columns except geometry/bounding_box/dropped ones,
@@ -41,7 +46,8 @@ def feature_json(df: DataFrame, *, drop: tuple[str, ...] = ()) -> Column:
     """
     from database2ogr_spark.functions.text import slugify
 
-    prop_cols = [c for c in df.columns if c not in SPECIAL and c not in drop]
+    cols = columns.columns if isinstance(columns, DataFrame) else list(columns)
+    prop_cols = [c for c in cols if c not in SPECIAL and c not in drop]
     # the reference's Feature constructor slugifies the POI `type` property
     # (X1, src/from-ground-up.js:201-203)
     props = F.to_json(
@@ -53,16 +59,23 @@ def feature_json(df: DataFrame, *, drop: tuple[str, ...] = ()) -> Column:
         )
     )
     parts = [F.lit('{"type":"Feature","geometry":'), F.col("geometry")]
-    if "bounding_box" in df.columns:
+    if "bounding_box" in cols:
         parts += [F.lit(',"bounding_box":'), F.col("bounding_box")]
     parts += [F.lit(',"properties":'), props, F.lit("}")]
     return F.concat(*parts)
 
 
+@functools.lru_cache(maxsize=64)
+def _feature_column(columns: tuple[str, ...]) -> Column:
+    # depends only on the names: built once per distinct table shape and
+    # shared by every document (and thread) that renders it
+    return feature_json(columns).alias("feature")
+
+
 def with_feature(df: DataFrame) -> DataFrame:
     """Normalize any per-table export DataFrame to a single ``feature``
     string column (the union-ready shape for U1)."""
-    return df.select(feature_json(df).alias("feature"))
+    return df.select(_feature_column(tuple(df.columns)))
 
 
 #: default row cap for the driver-side single-document sinks (K1/K3). A

@@ -8,7 +8,9 @@ driver over collected placemark strings, exactly the part that is inherently
 single-document (same boundary the reference has,
 ``src/from-ground-up.js:579-624``). All folders, and the document name, come
 back in one guarded count plus one collect (``geojson.collect_sections``);
-placemark order within a folder is pinned on the driver.
+placemark order within a folder is pinned on the driver. The render Columns
+depend only on a folder's column names (``_folder_columns``), so they are
+built once per folder shape and reused by every document.
 
 Reference parity notes:
 - element order inside <Placemark> mirrors the reference's push order:
@@ -22,8 +24,11 @@ Reference parity notes:
 
 from __future__ import annotations
 
+import functools
 import os
 import zipfile
+from collections.abc import Sequence
+from typing import BinaryIO
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -133,13 +138,14 @@ def style_header_xml(icon_dir: str = "files-11", icon_number: int = 11) -> str:
     return "".join(parts)
 
 
-def style_url_col(df: DataFrame) -> Column:
+def style_url_col(columns: Sequence[str]) -> Column:
     """Per-row style URL resolution with fallback (J3 + X15; reference
-    ``src/from-ground-up.js:844-858``): POI type → type style, zone
-    class_code → class style, else the table default."""
+    ``src/from-ground-up.js:844-858``) over rows with these columns: POI
+    type → type style, zone class_code → class style, else the table
+    default."""
     table = F.col("table")
     expr = F.lit(None).cast("string")
-    if "type" in df.columns:
+    if "type" in columns:
         type_map = F.create_map(
             *[F.lit(x) for kv in POI_STYLES.items() for x in kv]
         )
@@ -147,7 +153,7 @@ def style_url_col(df: DataFrame) -> Column:
             (table == "points_of_interest") & F.col("type").isNotNull(),
             type_map[F.col("type")],
         ).otherwise(expr)
-    if "class_code" in df.columns:
+    if "class_code" in columns:
         zone_map = F.create_map(
             *[
                 F.lit(x)
@@ -188,11 +194,12 @@ def _cdata_escape(col: Column) -> Column:
     return F.regexp_replace(col, r"\]\]>", "]]]]><![CDATA[>")
 
 
-def placemark_xml(df: DataFrame) -> Column:
-    """<Placemark> string column. Optional fields are included only when the
+def placemark_xml(columns: DataFrame | Sequence[str]) -> Column:
+    """<Placemark> string column for rows with these columns (a DataFrame
+    stands for its own). Optional fields are included only when the
     source value is present (X14, reference ``src/from-ground-up.js:830-860``);
     ``warnings`` HTML goes in CDATA inside ExtendedData."""
-    cols = df.columns
+    cols = columns.columns if isinstance(columns, DataFrame) else list(columns)
 
     def opt(name: str, render: Column) -> Column:
         if name not in cols:
@@ -247,7 +254,7 @@ def placemark_xml(df: DataFrame) -> Column:
     else:
         ext_el = F.lit("")
 
-    style_el = F.concat(F.lit("<styleUrl>#"), style_url_col(df), F.lit("</styleUrl>"))
+    style_el = F.concat(F.lit("<styleUrl>#"), style_url_col(cols), F.lit("</styleUrl>"))
 
     return F.concat(
         F.lit("<Placemark>"),
@@ -262,6 +269,18 @@ def placemark_xml(df: DataFrame) -> Column:
         style_el,
         F.lit("</Placemark>"),
     )
+
+
+@functools.lru_cache(maxsize=64)
+def _folder_columns(table: str, columns: tuple[str, ...]) -> tuple[Column, ...]:
+    """The render Columns of one folder with these columns: the placemark
+    string, plus the XML-escaped document name on ``areas_vw``. They depend
+    only on the names, so they are built once per distinct folder shape
+    and shared by every document (and thread) that renders it."""
+    cols = [placemark_xml(columns).alias("placemark")]
+    if table == "areas_vw":
+        cols.append(F.coalesce(_xml_escape(F.col("name")), F.lit("")).alias("doc_name"))
+    return tuple(cols)
 
 
 def kml_document(
@@ -293,12 +312,9 @@ def kml_document(
         collect_sections,
     )
 
-    sections = []
-    for table, df in table_dfs:
-        cols = [placemark_xml(df).alias("placemark")]
-        if table == "areas_vw":
-            cols.append(F.coalesce(_xml_escape(F.col("name")), F.lit("")).alias("doc_name"))
-        sections.append(df.select(*cols))
+    sections = [
+        df.select(*_folder_columns(table, tuple(df.columns))) for table, df in table_dfs
+    ]
     collected = collect_sections(
         sections,
         cap=DRIVER_SINK_MAX_ROWS if max_rows is None else max_rows,
@@ -324,9 +340,13 @@ def kml_document(
     )
 
 
-def write_kmz(kml: str, out_path: str, icons_dir: str | None = None) -> str:
+def write_kmz(
+    kml: str, out_path: str | BinaryIO, icons_dir: str | None = None
+) -> str | BinaryIO:
     """K4 — zip ``doc.kml`` (+ optional icon directory) at max compression
-    (reference uses zlib level 9, ``src/from-ground-up.js:940-941``)."""
+    (reference uses zlib level 9, ``src/from-ground-up.js:940-941``) into
+    ``out_path``: a file path, or a writable binary file object such as
+    ``io.BytesIO`` (the service builds each archive in memory)."""
     with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED, compresslevel=9) as zf:
         zf.writestr("doc.kml", kml)
         if icons_dir and os.path.isdir(icons_dir):

@@ -44,6 +44,9 @@ class Catalog:
         self.spark = spark
         self.sf_dir = sf_dir
         self.schemas = schemas or {}
+        #: area-invariant export plans by document kind, built on first use
+        #: (``plans.area_export.area_plan``); they hold no data
+        self.area_plans: dict[str, tuple] = {}
         try:
             # tolerate TIMESTAMP(NANOS) parquet (events table): read as raw
             # nanos longs; streaming/events.read_events converts to timestamps
@@ -218,6 +221,7 @@ class JdbcCatalog(Catalog):
         self.url = url
         self.driver = driver
         self.schemas = {}
+        self.area_plans = {}
         self._tables = tables
         self._num_partitions = num_partitions
         self._quote_tables = quote_tables

@@ -294,3 +294,67 @@ def test_export_area_id_is_coerced_and_validated(ates_catalog):
     # truncated to a different area's export (int(7.9) -> area 7)
     with pytest.raises(ValueError):
         export_geojson_document(ates_catalog, 7.9)
+
+
+def test_shared_area_plans_serve_concurrent_and_later_requests(spark, ates_dir, tmp_path):
+    """A catalog builds each document kind's expression trees once and
+    binds only the scans and the area per request. Pins that the sharing
+    is invisible: cold first requests racing on a fresh catalog, a second
+    area after a first, and a batch export after served requests all give
+    the bytes a fresh catalog gives. The batch export covering every area
+    shows no area predicate leaked into the shared trees."""
+    import threading
+
+    from database2ogr_spark.schemas import ATES_SCHEMAS
+    from database2ogr_spark.sources import fixtures
+    from database2ogr_spark.sources.catalog import Catalog
+
+    def fresh():
+        return Catalog(spark, ates_dir, ATES_SCHEMAS)
+
+    requests = [
+        (export_kml, 1), (export_kml, 2),
+        (export_geojson_document, 1), (export_geojson_document, 2),
+    ]
+    raced = fresh()
+    docs = [None] * len(requests)
+    barrier = threading.Barrier(len(requests))
+
+    def request(i, export, area):
+        barrier.wait()
+        docs[i] = export(raced, area)
+
+    threads = [
+        threading.Thread(target=request, args=(i, export, area))
+        for i, (export, area) in enumerate(requests)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    serial = fresh()
+    assert docs == [export(serial, area) for export, area in requests]
+
+    served = fresh()
+    export_kml(served, 1)
+    export_geojson_document(served, 1)
+    assert export_kml(served, 2, lang="fr") == export_kml(fresh(), 2, lang="fr")
+    assert export_geojson_document(served, 2) == export_geojson_document(fresh(), 2)
+
+    features = {}
+    for path in export_ndjson(served, str(tmp_path)):
+        lines = []
+        for part in glob.glob(f"{path}/part-*"):
+            with open(part) as fh:
+                lines += [json.loads(ln) for ln in fh.read().splitlines() if ln]
+        features[path.rsplit("/", 1)[1]] = lines
+    assert {t: len(f) for t, f in features.items()} == {
+        "areas_vw": len(fixtures.AREAS),
+        "points_of_interest": len(fixtures.POINTS_OF_INTEREST),
+        "access_roads": len(fixtures.ACCESS_ROADS),
+        "avalanche_paths": len(fixtures.AVALANCHE_PATHS),
+        # the inner join drops decision points without warnings
+        "decision_points": len({w[0] for w in fixtures.DECISION_POINTS_WARNINGS}),
+        "zones": len(fixtures.ZONES),
+    }
+    assert {f["properties"]["area_id"] for f in features["decision_points"]} == {1, 2}

@@ -170,6 +170,34 @@ def test_area_export_job_budget(spark, ates_catalog, export, max_jobs):
     assert n <= max_jobs, f"{export}: {n} Spark jobs (budget {max_jobs})"
 
 
+#: py4j round trips one area document may cost once its catalog has served
+#: a document of the same kind. Building every expression tree per request
+#: cost ~13.9k (KML) and ~5.0k (GeoJSON); with the trees built once per
+#: catalog a document measures ~0.8k, mostly the scans, the area predicate,
+#: the selects and collect_sections.
+AREA_DOCUMENT_PY4J_BUDGET = 2_000
+
+
+@pytest.mark.parametrize("export", ["export_kml", "export_geojson_document"])
+def test_area_export_py4j_budget(spark, ates_dir, py4j_round_trips, export):
+    """Round trips for a document of an area the catalog has not served
+    yet, after it served another area. Counts are deterministic where
+    timings are not: this pins that per request only the scans and the
+    area are bound, not the expression trees rebuilt."""
+    from database2ogr_spark.plans import area_export
+    from database2ogr_spark.schemas import ATES_SCHEMAS
+    from database2ogr_spark.sources.catalog import Catalog
+
+    catalog = Catalog(spark, ates_dir, ATES_SCHEMAS)
+    getattr(area_export, export)(catalog, 1)
+    with py4j_round_trips() as trips:
+        getattr(area_export, export)(catalog, 2)
+    assert trips.count <= AREA_DOCUMENT_PY4J_BUDGET, (
+        f"{export}: {trips.count} py4j round trips "
+        f"(budget {AREA_DOCUMENT_PY4J_BUDGET})"
+    )
+
+
 def test_guarded_jaccard_plan_has_no_anti_join(spark):
     # the round-4 guarded plan masks hot shingles IN-KERNEL: the old
     # broadcast-anti-join + sizes-join chain must not reappear, and the

@@ -48,3 +48,31 @@ def test_unknown_route_404(server):
     with pytest.raises(urllib.error.HTTPError) as e:
         urllib.request.urlopen(f"{server}/not/a/route")
     assert e.value.code == 404
+
+
+def test_export_failure_is_500_without_engine_text():
+    # the engine's exception text (file paths, plan fragments) stays on the
+    # server; the client gets a fixed plain-text body
+    from http.server import ThreadingHTTPServer
+
+    from database2ogr_spark.service import make_handler
+
+    secret = "/data/warehouse/areas_vw.parquet: boom"
+
+    def failing_export(*args, **kwargs):
+        raise RuntimeError(secret)
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(None, failing_export))
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        with pytest.raises(urllib.error.HTTPError) as e:
+            urllib.request.urlopen(f"http://127.0.0.1:{srv.server_address[1]}/en/1.kmz")
+        body = e.value.read()
+        assert e.value.code == 500
+        assert e.value.headers["Content-Type"].startswith("text/plain")
+        assert body
+        assert b"boom" not in body and b"/data/" not in body
+    finally:
+        srv.shutdown()
+        srv.server_close()
