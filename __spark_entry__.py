@@ -359,12 +359,13 @@ def _lsh_bucket_sql(
     bits: int = 3, dim: int = 64, plane_offset: int = 0, vec: str = "v"
 ) -> str:
     """Sign-LSH bucket over a double-list column ``vec`` — DuckDB twin of
-    operators/similarity._signs_bucket: hyperplane j's ±1 components are the
-    md5-derived ``int_sign(j, i)`` literals (embedded below), the projection
-    is the same left-to-right sequential sum Spark's ``aggregate`` computes
-    (±1 multiplication is exact, so the doubles match bit-for-bit), and
-    bucket = Σ 2^(bits-1-j)·[sum_j ≥ 0]. ``plane_offset`` mirrors
-    signs_bucket_expr's banding window ``[offset, offset+bits)``."""
+    operators/similarity.signs_bucket_expr: hyperplane j's ±1 components are
+    the md5-derived ``int_sign(j, i)`` literals (embedded below), the
+    projection is the same left-to-right sequential sum from 0.0 that the
+    unrolled Spark expression computes (±1 multiplication is exact, so the
+    doubles match bit-for-bit), and bucket = Σ 2^(bits-1-j)·[sum_j ≥ 0].
+    ``plane_offset`` mirrors signs_bucket_expr's banding window
+    ``[offset, offset+bits)``."""
     from database2ogr_spark.operators.similarity import int_sign
 
     terms = []
@@ -2730,7 +2731,7 @@ def q_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return forecast_eval(_t(spark, sf_dir, "events"), season_days=7)
 
 
-# same scored-pair scan as ann_recall_lsh; NDCG@10 math on top
+# NDCG@10 over the scored-pair scan shared with ann_recall_lsh
 @register(twin=f"""
             WITH c AS (SELECT vec_id,
                          list_transform(embedding, x -> CAST(x AS DOUBLE))
@@ -2774,41 +2775,7 @@ def q_ann_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 10 barely-similar members, scores lower). Graded relevance =
     the exact rounded cosine; DCG/IDCG use ln(r+1)/ln 2 explicitly so
     both engines run the identical float path."""
-    emb = _emb(spark, sf_dir)
-    c = emb.select(
-        "vec_id",
-        F.col("embedding").alias("cv"),
-        SIM.signs_bucket_expr("embedding", bits=3, dim=64).alias("cb"),
-    ).persist()
-    q = emb.filter(F.col("vec_id") % 97 == 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        SIM.signs_bucket_expr("embedding", bits=3, dim=64).alias("qb"),
-    ).persist()
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(SIM.cosine_unrolled_expr("qv", "cv", 64), 6).alias("sim"),
-            (
-                (F.col("cb") == F.col("qb"))
-                | (F.col("cb") == F.col("qb").bitwiseXOR(F.lit(1)))
-                | (F.col("cb") == F.col("qb").bitwiseXOR(F.lit(2)))
-                | (F.col("cb") == F.col("qb").bitwiseXOR(F.lit(4)))
-            ).alias("probed"),
-        )
-    )
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    w_ann = Window.partitionBy("query_id").orderBy(
-        F.col("probed").desc(), F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    ranked = pairs.withColumn("re", F.row_number().over(w_exact)).withColumn(
-        "ra", F.row_number().over(w_ann)
-    )
+    ranked = _ann_ranked_pairs(spark, sf_dir)
     ln2 = F.log(F.lit(2.0))
     agg = ranked.groupBy("query_id").agg(
         F.sum(
@@ -8239,6 +8206,52 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.lsh_topk(emb, queries_df, k=5, bits=3, dim=64, query_id_col="query_id")
 
 
+def _ann_ranked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one scored-pair scan behind ann_recall_lsh and ann_ndcg: every
+    (query, corpus vector) pair of the rotated query set (vec_id % 97 ==
+    3) with its rounded cosine ``sim``, its multiprobe membership
+    ``probed`` (bits=3 bucket equal to the query's or to one of its three
+    1-bit neighbours), its exact rank ``re`` and its ANN rank ``ra``
+    (bucket matches first, so both top-10 sets fall out of one shuffle).
+    The bucket and cosine are unrolled SQL strings; the persists are a
+    projection barrier so the bucket evaluates per vector, not per pair."""
+    emb = _emb(spark, sf_dir)
+    c = emb.select(
+        "vec_id",
+        F.col("embedding").alias("cv"),
+        SIM.signs_bucket_expr("embedding", bits=3, dim=64).alias("cb"),
+    ).persist()
+    q = emb.filter(F.col("vec_id") % 97 == 3).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        SIM.signs_bucket_expr("embedding", bits=3, dim=64).alias("qb"),
+    ).persist()
+    pairs = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            F.round(SIM.cosine_unrolled_expr("qv", "cv", 64), 6).alias("sim"),
+            (
+                (F.col("cb") == F.col("qb"))
+                | (F.col("cb") == F.col("qb").bitwiseXOR(F.lit(1)))
+                | (F.col("cb") == F.col("qb").bitwiseXOR(F.lit(2)))
+                | (F.col("cb") == F.col("qb").bitwiseXOR(F.lit(4)))
+            ).alias("probed"),
+        )
+    )
+    w_exact = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("vec_id").asc()
+    )
+    w_ann = Window.partitionBy("query_id").orderBy(
+        F.col("probed").desc(), F.col("sim").desc(), F.col("vec_id").asc()
+    )
+    return pairs.withColumn("re", F.row_number().over(w_exact)).withColumn(
+        "ra", F.row_number().over(w_ann)
+    )
+
+
 # recall@10 of the bits=3 multi_probe=3 sign-LSH ANN vs
 # brute-force ground truth on the rotated query set
 # (vec_id % 97 == 3): probe buckets are the query bucket + its
@@ -8309,51 +8322,7 @@ def q_ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     contiguously and both top-10 sets fall out of a single shuffle (the
     operator-composed version scanned and scored the corpus twice,
     ~2× this entry's cost at sf0.1)."""
-    emb = _emb(spark, sf_dir)
-    # expr-string tiers: the Column-object versions of these unrolled
-    # expressions cost ~6.7 s of py4j DRIVER time to BUILD per invocation
-    # (vs ~1 s of execution) — the parsed-SQL twins are arithmetic-
-    # identical (hash-match pinned) and build in milliseconds. persist =
-    # projection barrier so the bucket evaluates per vector, not per pair.
-    c = emb.select(
-        "vec_id",
-        F.col("embedding").alias("cv"),
-        SIM.signs_bucket_expr("embedding", bits=3, dim=64).alias("cb"),
-    ).persist()
-    q = emb.filter(F.col("vec_id") % 97 == 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        SIM.signs_bucket_expr("embedding", bits=3, dim=64).alias("qb"),
-    ).persist()
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            # unrolled codegen cosine, expr-string tier — bit-identical
-            # to the fold tier (same left-to-right float order)
-            F.round(
-                SIM.cosine_unrolled_expr("qv", "cv", 64), 6
-            ).alias("sim"),
-            # multiprobe membership: query bucket or any 1-bit neighbor
-            (
-                (F.col("cb") == F.col("qb"))
-                | (F.col("cb") == F.col("qb").bitwiseXOR(F.lit(1)))
-                | (F.col("cb") == F.col("qb").bitwiseXOR(F.lit(2)))
-                | (F.col("cb") == F.col("qb").bitwiseXOR(F.lit(4)))
-            ).alias("probed"),
-        )
-    )
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    w_ann = Window.partitionBy("query_id").orderBy(
-        F.col("probed").desc(), F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    ranked = pairs.withColumn("re", F.row_number().over(w_exact)).withColumn(
-        "ra", F.row_number().over(w_ann)
-    )
+    ranked = _ann_ranked_pairs(spark, sf_dir)
     agg = ranked.groupBy("query_id").agg(
         F.sum(F.when(F.col("re") <= 10, 1).otherwise(0))
         .cast("long")

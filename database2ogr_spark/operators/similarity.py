@@ -9,8 +9,14 @@ seeds) — corpus is pre-bucketed; queries probe only matching buckets, cutting
 the scanned fraction ~2^-bits per probe. At 100 TB the bucketed corpus would
 be written bucketed-by(bucket) so probes prune at the file level.
 
-Dot products use ``zip_with`` + ``aggregate`` higher-order functions —
-JVM-side, no Python in the loop.
+Two expression tiers, both JVM-side with no Python in the loop. The
+generic tier (``dot``, ``l2_norm``, ``cosine``) folds with the
+``zip_with`` + ``aggregate`` higher-order functions and takes any dim.
+When the dim is known at build time, the unrolled tier
+(``cosine_unrolled_expr``, ``signs_bucket_expr``, the late-interaction and
+label-diversity kernels) writes every element product into ONE parsed SQL
+string: the same left-to-right float order, whole-stage codegen, and one
+py4j call to build instead of one per Column operator.
 """
 
 from __future__ import annotations
@@ -77,25 +83,6 @@ def l2_norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def cosine_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """``cosine`` with the folds unrolled into explicit element products —
-    bit-identical arithmetic (same left-to-right float order as the
-    ``F.aggregate`` fold, same dot/(‖a‖·‖b‖) shape) but whole-stage
-    codegen instead of interpreted higher-order functions: ~10× the
-    throughput on brute-force pair scans.  Requires a statically known
-    ``dim``; the fold version remains the generic path."""
-    dot_acc = F.lit(0.0)
-    na = F.lit(0.0)
-    nb = F.lit(0.0)
-    for j in range(dim):
-        x = a[j].cast("double")
-        y = b[j].cast("double")
-        dot_acc = dot_acc + x * y
-        na = na + x * x
-        nb = nb + y * y
-    return dot_acc / (F.sqrt(na) * F.sqrt(nb))
 
 
 def cosine_topk(
@@ -213,60 +200,46 @@ def cosine_topk_quantized(
     )
 
 
-def _signs_bucket(vec: Column, *, bits: int, dim: int) -> Column:
-    """Random-hyperplane sign sketch → integer bucket in [0, 2^bits).
-
-    Hyperplane j's component i is a deterministic pseudo-random ±1 derived
-    from ``stable_hash64`` of (j, i) — reproducible anywhere, no stored model.
-    A ±1 hyperplane sketch is standard sign-LSH up to a diagonal scaling and
-    keeps everything integer/expression-side.
-    """
-    def plane_sign(j: int) -> Column:
-        comps = F.array(
-            *[
-                F.when(
-                    F.lit(int_sign(j, i) > 0), F.element_at(vec, i + 1).cast("double")
-                ).otherwise(-F.element_at(vec, i + 1).cast("double"))
-                for i in range(dim)
-            ]
-        )
-        s = F.aggregate(comps, F.lit(0.0), lambda acc, v: acc + v)
-        return F.when(s >= 0, F.lit(1)).otherwise(F.lit(0))
-
-    bucket = F.lit(0)
-    for j in range(bits):
-        bucket = bucket * 2 + plane_sign(j)
-    return bucket
+def _dot_sql(a: str, b: str, dim: int) -> str:
+    """Unrolled Σ ``CAST(a[j] AS DOUBLE) * CAST(b[j] AS DOUBLE)`` over
+    ``dim`` elements of the array columns named ``a`` and ``b``, as SQL
+    text. SQL ``+`` is left-associative, so the sum runs left to right
+    from 0.0, the float order of the ``aggregate`` fold in :func:`dot`.
+    For a self-dot (``a == b``) the leading 0.0 cannot change a bit: each
+    term x·x is +0.0, positive, +inf, NaN or null, never -0.0, so
+    ``0.0 + x0·x0`` equals ``x0·x0``."""
+    terms = " + ".join(
+        f"CAST({a}[{j}] AS DOUBLE) * CAST({b}[{j}] AS DOUBLE)" for j in range(dim)
+    )
+    return f"(CAST(0.0 AS DOUBLE) + {terms})"
 
 
 def cosine_unrolled_expr(a_name: str, b_name: str, dim: int) -> Column:
-    """:func:`cosine_unrolled` built as ONE parsed SQL string — identical
-    arithmetic (same left-to-right float order, same element casts) but a
-    single py4j round trip instead of ~6·dim Column-object operations.
-    Building the 64-dim Column tree costs SECONDS of driver time per
-    invocation (measured: 6.7 s plan construction for the ann_recall
-    entry, vs ~1 s of actual execution); the parsed string costs
-    milliseconds. Takes column NAMES (``arr[i]`` is 0-based in SQL,
-    matching ``element_at(arr, i+1)``)."""
-    def el(n: str, i: int) -> str:
-        return f"CAST({n}[{i}] AS DOUBLE)"
-
-    dot = " + ".join(f"{el(a_name, j)} * {el(b_name, j)}" for j in range(dim))
-    na = " + ".join(f"{el(a_name, j)} * {el(a_name, j)}" for j in range(dim))
-    nb = " + ".join(f"{el(b_name, j)} * {el(b_name, j)}" for j in range(dim))
+    """:func:`cosine` for a ``dim`` known at build time, as ONE parsed SQL
+    string — the same left-to-right float order and element casts as the
+    fold, but whole-stage codegen instead of interpreted higher-order
+    functions (~10× the throughput on brute-force pair scans), and one
+    py4j call to build instead of ~6·dim Column operations (a 64-dim
+    Column tree took seconds of driver time). Takes column NAMES
+    (``arr[i]`` is 0-based in SQL, matching ``element_at(arr, i+1)``)."""
     return F.expr(
-        f"(CAST(0.0 AS DOUBLE) + {dot}) / "
-        f"(SQRT(CAST(0.0 AS DOUBLE) + {na}) * "
-        f"SQRT(CAST(0.0 AS DOUBLE) + {nb}))"
+        f"{_dot_sql(a_name, b_name, dim)} / "
+        f"(SQRT({_dot_sql(a_name, a_name, dim)}) * "
+        f"SQRT({_dot_sql(b_name, b_name, dim)}))"
     )
 
 
 def signs_bucket_expr(
     vec_name: str, *, bits: int, dim: int, plane_offset: int = 0
 ) -> Column:
-    """:func:`_signs_bucket` as ONE parsed SQL string — same md5-derived
-    ±1 hyperplanes, same left-to-right summation and >= 0 vote, single
-    py4j call (see :func:`cosine_unrolled_expr` for why).
+    """Random-hyperplane sign sketch → integer bucket in [0, 2^bits), as
+    ONE parsed SQL string (see :func:`cosine_unrolled_expr` for why).
+
+    Hyperplane j's component i is the md5-derived ±1 ``int_sign(j, i)`` —
+    reproducible anywhere, no stored model. A ±1 hyperplane sketch is
+    standard sign-LSH up to a diagonal scaling. Each plane's projection is
+    summed left to right from 0.0 and votes 1 when ``>= 0``; the first
+    plane is the most significant bit.
 
     ``plane_offset`` selects the hyperplane window ``[offset, offset+bits)``
     so BANDED schemes (each band an independent bucket over its own plane
@@ -343,12 +316,12 @@ def lsh_topk(
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("c_vec"),
-        _signs_bucket(F.col(vec_col), bits=bits, dim=dim).alias("bucket"),
+        signs_bucket_expr(vec_col, bits=bits, dim=dim).alias("bucket"),
     )
     q_base = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        _signs_bucket(F.col(vec_col), bits=bits, dim=dim).alias("bucket"),
+        signs_bucket_expr(vec_col, bits=bits, dim=dim).alias("bucket"),
     )
     if multi_probe > 0:
         flips = F.array(
@@ -584,7 +557,7 @@ def embedding_near_dup_pairs(
     b = corpus.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        _signs_bucket(F.col(vec_col), bits=bits, dim=dim).alias("bucket"),
+        signs_bucket_expr(vec_col, bits=bits, dim=dim).alias("bucket"),
     )
     pairs = (
         b.alias("l")
@@ -1003,23 +976,12 @@ def late_interaction_topk(
     sub = dim // n_tokens
 
     def toks(df: DataFrame, id_alias: str, tv_alias: str) -> DataFrame:
-        return df.select(
-            F.col(id_alias),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("tok"),
-                            F.slice(F.col(vec_col), i * sub + 1, sub).alias("tv"),
-                        )
-                        for i in range(n_tokens)
-                    ]
-                )
-            ).alias("t"),
-        ).select(
-            id_alias,
-            F.col("t.tok").alias(f"{tv_alias}_tok"),
-            F.col("t.tv").alias(tv_alias),
+        slices = ", ".join(
+            f"struct({i} AS tok, slice({vec_col}, {i * sub + 1}, {sub}) AS tv)"
+            for i in range(n_tokens)
+        )
+        return df.selectExpr(id_alias, f"explode(array({slices})) AS t").selectExpr(
+            id_alias, f"t.tok AS {tv_alias}_tok", f"t.tv AS {tv_alias}"
         )
 
     c_tok = toks(
@@ -1031,32 +993,14 @@ def late_interaction_topk(
         "qv",
     )
     # the n_tokens² cosines per (query, doc) are the hot loop: the generic
-    # `cosine()` helper folds with higher-order functions (interpreted per
-    # element — measured ~6 s at sf0.1), so the dot product is expanded
-    # into explicit element products (whole-stage codegen) with the SAME
-    # left-to-right float order as the fold, and the per-token norms are
-    # computed once per token row instead of once per pair — identical
-    # arithmetic, ~10× the throughput
-    def _ex_dot(a: str, b: str) -> Column:
-        acc = F.lit(0.0)
-        for j in range(sub):
-            acc = acc + (
-                F.col(a)[j].cast("double") * F.col(b)[j].cast("double")
-            )
-        return acc
-
-    def _ex_norm(a: str) -> Column:
-        acc = F.lit(0.0)
-        for j in range(sub):
-            acc = acc + (
-                F.col(a)[j].cast("double") * F.col(a)[j].cast("double")
-            )
-        return F.sqrt(acc)
-
-    c_tok = c_tok.withColumn("_cn", _ex_norm("cv"))
-    q_tok = q_tok.withColumn("_qn", _ex_norm("qv"))
+    # `cosine()` folds with interpreted higher-order functions, so the dot
+    # products are unrolled element products (whole-stage codegen, the same
+    # left-to-right float order as the fold), and the per-token norms are
+    # computed once per token row instead of once per pair
+    c_tok = c_tok.withColumn("_cn", F.expr(f"SQRT({_dot_sql('cv', 'cv', sub)})"))
+    q_tok = q_tok.withColumn("_qn", F.expr(f"SQRT({_dot_sql('qv', 'qv', sub)})"))
     sim = F.round(
-        (_ex_dot("cv", "qv") / (F.col("_cn") * F.col("_qn")))
+        (F.expr(_dot_sql("cv", "qv", sub)) / (F.col("_cn") * F.col("_qn")))
         * F.lit(1_000_000.0)
     ).cast("long")
     per_qtok = (
@@ -1210,20 +1154,14 @@ def label_diversity(
             f"{label_col} int, n bigint, mean_self_dot double, "
             "mean_pairwise_dot double",
         )
-    v = F.col(vec_col)
-    self_dot = None
-    for i in range(d):
-        x = v[i].cast("double")
-        self_dot = x * x if self_dot is None else self_dot + x * x
+    # SQL strings with the alias inside: one py4j call per column instead
+    # of one per Column operator
     agg = df.groupBy(label_col).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(self_dot).alias("_ssq"),
-        *[F.sum(v[i].cast("double")).alias(f"_s{i}") for i in range(d)],
+        F.expr(f"sum({_dot_sql(vec_col, vec_col, d)}) AS _ssq"),
+        *[F.expr(f"sum(CAST({vec_col}[{i}] AS DOUBLE)) AS _s{i}") for i in range(d)],
     )
-    sum_sq = None
-    for i in range(d):
-        s = F.col(f"_s{i}")
-        sum_sq = s * s if sum_sq is None else sum_sq + s * s
+    sum_sq = F.expr(" + ".join(f"_s{i} * _s{i}" for i in range(d)))
     return agg.select(
         label_col,
         "n",

@@ -5,6 +5,7 @@ A regression here (an extra Exchange, a scan reading the full row) is a
 
 from __future__ import annotations
 
+import gc
 import os
 import re
 
@@ -195,6 +196,31 @@ def test_area_export_py4j_budget(spark, ates_dir, py4j_round_trips, export):
     assert trips.count <= AREA_DOCUMENT_PY4J_BUDGET, (
         f"{export}: {trips.count} py4j round trips "
         f"(budget {AREA_DOCUMENT_PY4J_BUDGET})"
+    )
+
+
+#: py4j round trips one registry build may cost. Built as Column trees,
+#: the widest unrolled entries cost 6.2k (late_interaction) to 32k
+#: (lsh_topk); as parsed SQL strings each measures ~0.7–1.4k.
+REGISTRY_BUILD_PY4J_BUDGET = 2_000
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["lsh_topk", "embedding_near_dup_lsh", "label_diversity", "late_interaction"],
+)
+def test_registry_build_py4j_budget(spark, py4j_round_trips, name):
+    """Round trips for a second build of a registry entry (call it, read
+    its schema, run nothing): pins that its unrolled embedding arithmetic
+    is built as SQL strings, not one py4j call per Column operator."""
+    build, sf = entrymod.queries()[name], "/root/testdata/sf0.001"
+    build(spark, sf).schema
+    gc.collect()
+    with py4j_round_trips() as trips:
+        build(spark, sf).schema
+    assert trips.count <= REGISTRY_BUILD_PY4J_BUDGET, (
+        f"{name}: {trips.count} py4j round trips "
+        f"(budget {REGISTRY_BUILD_PY4J_BUDGET})"
     )
 
 

@@ -49,6 +49,62 @@ def test_lsh_topk_subset_of_exact(spark):
     assert sims == sorted(sims, reverse=True)
 
 
+def test_signs_bucket_expr_matches_python_reference(spark):
+    # the sketch's contract, bit for bit: Σ int_sign(j, i)·x_i summed left
+    # to right from 0.0, vote 1 when >= 0, plane `plane_offset` the most
+    # significant bit
+    rows = [
+        (r.vec_id, list(r.embedding))
+        for r in spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        .orderBy("vec_id")
+        .limit(50)
+        .collect()
+    ]
+    dim = len(rows[0][1])
+    # two opposite-sign components on planes 0 and 3: both projections
+    # sum to exactly 0.0, which must vote 1
+    a, b = next(
+        (a, b)
+        for a in range(dim)
+        for b in range(a + 1, dim)
+        if SIM.int_sign(0, a) != SIM.int_sign(0, b)
+        and SIM.int_sign(3, a) != SIM.int_sign(3, b)
+    )
+    balanced = [0.0] * dim
+    balanced[a] = balanced[b] = 1.0
+    rows.append((-1, balanced))
+
+    def reference(vec, bits, plane_offset):
+        bucket = 0
+        for j in range(plane_offset, plane_offset + bits):
+            s = 0.0
+            for i, x in enumerate(vec):
+                s += SIM.int_sign(j, i) * x
+            bucket = bucket * 2 + (1 if s >= 0 else 0)
+        return bucket
+
+    cases = [(bits, off) for bits in (3, 4) for off in (0, 3)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = df.select(
+        "vec_id",
+        *[
+            SIM.signs_bucket_expr("embedding", bits=bits, dim=dim, plane_offset=off)
+            .alias(f"b{bits}_{off}")
+            for bits, off in cases
+        ],
+    ).collect()
+    assert len(got) == len(rows)
+    vecs = dict(rows)
+    for r in got:
+        for bits, off in cases:
+            assert r[f"b{bits}_{off}"] == reference(vecs[r.vec_id], bits, off), (
+                r.vec_id, bits, off,
+            )
+    crafted = next(r for r in got if r.vec_id == -1)
+    for bits, off in cases:
+        assert crafted[f"b{bits}_{off}"] >> (bits - 1) == 1
+
+
 def test_ivf_topk_recall_on_real_embeddings(spark):
     # IVF must find most of the exact top-k (approximate, but nontrivially so)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
