@@ -9678,20 +9678,25 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ATES_DIR: str | None = None
+_ATES_CATALOG: Catalog | None = None
 
 
 def _ates_catalog(spark: SparkSession) -> Catalog:
     """Materialize the ATES fixture tables once per process (FIXTURES.md) —
     the driver's sf dirs don't carry them; this exercises the reference's
-    actual schema end-to-end."""
-    global _ATES_DIR
+    actual schema end-to-end. One catalog serves every build in a session,
+    so each document kind's export plan (``area_export.area_plan``) is
+    built once, not per registry build."""
+    global _ATES_DIR, _ATES_CATALOG
     from database2ogr_spark.schemas import ATES_SCHEMAS
     from database2ogr_spark.sources.fixtures import write_ates_fixtures
 
     if _ATES_DIR is None:
         _ATES_DIR = _tmp("d2o_ates_fixtures")
         write_ates_fixtures(spark, _ATES_DIR)
-    return Catalog(spark, _ATES_DIR, ATES_SCHEMAS)
+    if _ATES_CATALOG is None or _ATES_CATALOG.spark is not spark:
+        _ATES_CATALOG = Catalog(spark, _ATES_DIR, ATES_SCHEMAS)
+    return _ATES_CATALOG
 
 
 # golden structural oracles for the ATES fixture pipeline (area 1):
@@ -9821,8 +9826,10 @@ def q_ates_kml_document(spark: SparkSession, sf_dir: str) -> DataFrame:
                 hashlib.md5(folder.encode("utf-8")).hexdigest(),
             )
         )
-    for pos, lang in ((97, "en"), (98, "fr")):
-        doc = export_kml(cat, 1, lang=lang, icon_number=11)
+    for pos, lang, doc in (
+        (97, "en", doc_en),
+        (98, "fr", export_kml(cat, 1, lang="fr", icon_number=11)),
+    ):
         rows.append(
             (
                 f"document:{lang}",

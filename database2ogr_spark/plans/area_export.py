@@ -27,11 +27,11 @@ the six immutable queries, their projection Columns (``kml_geometry``,
 ``feature_json`` render Columns once per column list. Per request,
 ``build_table_dfs`` only reads the tables through ``catalog.table`` (so
 data is read at request time), filters on the bound area and applies
-the built Columns; the document then costs the unchanged
-``collect_sections`` (one guarded count plus one collect). Batch mode
-(``export_ndjson``, ``area_id=None``) binds the same sections without a
-predicate. No per-area DataFrame is kept: a second action on one would
-reuse its materialized shuffle and serve stale data.
+the built Columns; the document then costs ``collect_sections`` (one
+guarded collect). Batch mode (``export_ndjson``, ``area_id=None``) binds
+the same sections without a predicate. No per-area DataFrame is kept: a
+second action on one would reuse its materialized shuffle and serve stale
+data.
 """
 
 from __future__ import annotations

@@ -15,8 +15,8 @@ document per request). The expression trees of a document (queries,
 geometry serialization, warnify, placemark rendering) are built on the
 first request and shared by every later one, on any thread
 (``plans.area_export``). A request only reads the tables, binds its area
-and runs one guarded count plus one collect over its six sections, with
-section order pinned on the driver (``sinks.geojson.collect_sections``).
+and runs one guarded collect over its six sections, with section order
+pinned on the driver (``sinks.geojson.collect_sections``).
 Data is read at request time, so a request sees the tables as they are
 then. The KMZ archive is built in memory. A production deployment would put this behind a queue or
 pre-materialize per-area KMZs with one distributed job

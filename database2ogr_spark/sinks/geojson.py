@@ -10,7 +10,7 @@ names, so ``with_feature`` builds it once per table shape.
 Scale stance: the one-file ``FeatureCollection`` (K1) is inherently
 driver-bound — the reference builds it in memory (``src/from-ground-up.js:
 212-215``) and so must any engine; it exists for parity and small exports.
-A document costs one guarded count plus one collect over all its sections
+A document costs one guarded collect over all its sections
 (``collect_sections``), with section order pinned on the driver.
 The scalable default is K2: proper newline-delimited GeoJSON written
 distributed via ``df.write.text`` (the reference's GeoJSON-LD writer forgot
@@ -89,26 +89,23 @@ class DriverSinkOverflow(RuntimeError):
     its cap — the caller should switch to the distributed sink instead."""
 
 
-def guard_driver_rows(df: DataFrame, *, cap: int, sink: str, alternative: str) -> int:
-    """Count-gate a driver-side collect: one cheap aggregation job up front
-    (count, not CollectLimit — CollectLimit re-executes the plan in scale-up
-    batches) in exchange for never OOM-ing the driver on a fat export."""
-    n = df.count()
-    if n > cap:
-        raise DriverSinkOverflow(
-            f"{sink}: {n} rows exceed the driver-side document cap ({cap}); "
-            f"write this export with {alternative} instead"
-        )
-    return n
-
-
 def collect_sections(
     sections: list[DataFrame], *, cap: int, sink: str, alternative: str
 ) -> list[list[Row]]:
     """Collect the sections of one driver-side document (K1/K3) in one
-    guarded pass: one :func:`guard_driver_rows` count over all sections
-    (``cap`` is the total), then one ``collect()``. A document costs those
-    two actions, not two per section.
+    guarded collect: the union of all sections (``cap`` is the total) is
+    cut to ``cap + 1`` rows, and a document that comes back with more than
+    ``cap`` rows raises :class:`DriverSinkOverflow`. A document costs that
+    one action, not one per section, and the driver never holds more than
+    ``cap + 1`` rows.
+
+    The cut is a ``GlobalLimit`` over a single-partition exchange
+    (``limit`` then ``coalesce(1)``), not the ``CollectLimit`` a bare
+    ``limit().collect()`` plans: its scale-up ``executeTake`` runs a job
+    per batch of partitions and can return up to partitions × (cap + 1)
+    rows to the driver. A refused document may still move up to
+    partitions × (cap + 1) rows through the one executor-side shuffle
+    before it is refused.
 
     Each section's first column is its rendered string. Further columns
     ride along and read NULL in the sections that lack them. Returns one
@@ -129,9 +126,14 @@ def collect_sections(
     union = functools.reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged
     )
-    guard_driver_rows(union, cap=cap, sink=sink, alternative=alternative)
+    collected = union.limit(cap + 1).coalesce(1).collect()
+    if len(collected) > cap:
+        raise DriverSinkOverflow(
+            f"{sink}: more than {cap} rows, over the driver-side document "
+            f"cap; write this export with {alternative} instead"
+        )
     out: list[list[Row]] = [[] for _ in sections]
-    for row in union.collect():
+    for row in collected:
         out[row["section"]].append(row)
     return [sorted(rows, key=itemgetter("rendered")) for rows in out]
 

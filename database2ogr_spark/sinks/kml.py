@@ -7,7 +7,7 @@ folders by the query list and wrapping with the Style header — happens on the
 driver over collected placemark strings, exactly the part that is inherently
 single-document (same boundary the reference has,
 ``src/from-ground-up.js:579-624``). All folders, and the document name, come
-back in one guarded count plus one collect (``geojson.collect_sections``);
+back in one guarded collect (``geojson.collect_sections``);
 placemark order within a folder is pinned on the driver. The render Columns
 depend only on a folder's column names (``_folder_columns``), so they are
 built once per folder shape and reused by every document.
@@ -198,9 +198,14 @@ def placemark_xml(columns: DataFrame | Sequence[str]) -> Column:
     """<Placemark> string column for rows with these columns (a DataFrame
     stands for its own). Optional fields are included only when the
     source value is present (X14, reference ``src/from-ground-up.js:830-860``);
-    ``warnings`` HTML goes in CDATA inside ExtendedData."""
-    cols = columns.columns if isinstance(columns, DataFrame) else list(columns)
+    ``warnings`` HTML goes in CDATA inside ExtendedData. It depends only on
+    the names, so it is built once per distinct column list and shared."""
+    cols = columns.columns if isinstance(columns, DataFrame) else columns
+    return _placemark_xml(tuple(cols))
 
+
+@functools.lru_cache(maxsize=64)
+def _placemark_xml(cols: tuple[str, ...]) -> Column:
     def opt(name: str, render: Column) -> Column:
         if name not in cols:
             return F.lit("")
@@ -298,7 +303,7 @@ def kml_document(
     §2.7). Placemark rendering runs distributed; the placemark strings of
     all folders come back in one guarded collect
     (``geojson.collect_sections``, placemarks ordered by their string
-    within a folder), guarded by ``max_rows`` (default
+    within a folder), cut at ``max_rows`` + 1 rows (default
     ``geojson.DRIVER_SINK_MAX_ROWS`` across all folders) — an over-cap
     export raises ``DriverSinkOverflow`` pointing at the distributed NDJSON
     path.

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import threading
+import time
 
 import pytest
 
@@ -36,6 +37,11 @@ class Py4jRoundTrips:
     included). Wraps ``ClientServerConnection.send_command`` on entry and
     restores it on exit.
 
+    py4j sends the deletes of freed Java references from a worker thread
+    that drains a queue. Entry waits for that queue to empty, so deletes
+    of what earlier code freed (thousands after a first build of an
+    export plan) do not land in the count at random.
+
         with Py4jRoundTrips() as trips:
             build()
         assert trips.count <= budget
@@ -48,7 +54,12 @@ class Py4jRoundTrips:
 
     def __enter__(self) -> "Py4jRoundTrips":
         from py4j.clientserver import ClientServerConnection
+        from pyspark import SparkContext
 
+        pending = SparkContext._gateway._gateway_client.finalizer_deque
+        deadline = time.monotonic() + 30
+        while pending and time.monotonic() < deadline:
+            time.sleep(0.01)
         original = self._original = ClientServerConnection.send_command
 
         def counting(conn, command):

@@ -194,6 +194,44 @@ def test_driver_sink_row_cap_trips(spark):
     assert kml.count("<Placemark>") == 12
 
 
+def test_collect_sections_bounds_driver_rows(spark):
+    """The row-cap guard is the collect itself: a GlobalLimit of cap + 1
+    over a single-partition exchange, so an over-cap document brings at
+    most cap + 1 rows to the driver however many partitions feed it. A
+    CollectLimit would scale up over partitions, up to partitions ×
+    (cap + 1) rows."""
+    import pytest
+
+    from database2ogr_spark.session import executed_plans
+    from database2ogr_spark.sinks.geojson import (
+        DriverSinkOverflow,
+        feature_collection_json,
+    )
+    from database2ogr_spark.sinks.kml import kml_document
+
+    df = spark.range(0, 100, 1, 8).select(
+        F.lit('{"type":"Point","coordinates":[0,0]}').alias("geometry"),
+        F.col("id").alias("poi_id"),
+        F.lit("points_of_interest").alias("table"),
+    )
+    assert df.rdd.getNumPartitions() >= 8
+    for sink, export in [
+        ("K1", lambda: feature_collection_json([df], max_rows=5)),
+        ("K3", lambda: kml_document([("points_of_interest", df)], max_rows=5)),
+    ]:
+
+        def refused():
+            with pytest.raises(DriverSinkOverflow, match=rf"\({sink}\): more than 5 rows"):
+                export()
+            return spark.range(1)
+
+        _, plans = executed_plans(spark, refused)
+        collect = [p for p in plans if "GlobalLimit 6" in p]
+        assert len(collect) == 1, f"{sink}: {plans}"
+        assert "Exchange SinglePartition" in collect[0], collect[0]
+        assert not any("CollectLimit" in p for p in plans), plans
+
+
 def test_collect_sections_matches_spark_string_order(spark):
     """collect_sections sorts on the driver with Python's str order; the
     documents stay byte-identical to an orderBy only because code-point

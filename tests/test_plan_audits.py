@@ -144,11 +144,11 @@ def test_shuffle_budgets(spark, name, max_shuffles):
 @pytest.mark.parametrize(
     "export,max_jobs",
     [
-        # one guarded count (broadcast + warnify shuffle + count agg + final)
-        # plus one collect (broadcast + warnify shuffle + result), with AQE
-        ("export_geojson_document", 7),
-        # the same two actions; the area name rides in the collect
-        ("export_kml", 7),
+        # one guarded collect, with AQE: the warnings broadcast, the warnify
+        # shuffle, the single-partition limit exchange and the result
+        ("export_geojson_document", 4),
+        # the same four jobs; the area name rides in the collect
+        ("export_kml", 4),
     ],
 )
 def test_area_export_job_budget(spark, ates_catalog, export, max_jobs):
@@ -201,26 +201,39 @@ def test_area_export_py4j_budget(spark, ates_dir, py4j_round_trips, export):
 
 #: py4j round trips one registry build may cost. Built as Column trees,
 #: the widest unrolled entries cost 6.2k (late_interaction) to 32k
-#: (lsh_topk); as parsed SQL strings each measures ~0.7–1.4k.
+#: (lsh_topk); as parsed SQL strings each measures ~0.7–0.9k. The ATES
+#: entries rebuilt their export plans per build (4.4k–13.2k) until one
+#: catalog served the whole session.
 REGISTRY_BUILD_PY4J_BUDGET = 2_000
+#: ates_kml_document builds three area documents, each at the per-document budget
+REGISTRY_BUILD_PY4J_BUDGETS = {"ates_kml_document": 3 * AREA_DOCUMENT_PY4J_BUDGET}
 
 
 @pytest.mark.parametrize(
     "name",
-    ["lsh_topk", "embedding_near_dup_lsh", "label_diversity", "late_interaction"],
+    [
+        "lsh_topk",
+        "embedding_near_dup_lsh",
+        "label_diversity",
+        "late_interaction",
+        "ates_geojson_features",
+        "ates_kml_placemarks",
+        "ates_kml_document",
+    ],
 )
 def test_registry_build_py4j_budget(spark, py4j_round_trips, name):
     """Round trips for a second build of a registry entry (call it, read
-    its schema, run nothing): pins that its unrolled embedding arithmetic
-    is built as SQL strings, not one py4j call per Column operator."""
+    its schema): pins that its unrolled embedding arithmetic is built as
+    SQL strings, not one py4j call per Column operator, and that the ATES
+    entries reuse one catalog's export plans and render Columns."""
     build, sf = entrymod.queries()[name], "/root/testdata/sf0.001"
+    budget = REGISTRY_BUILD_PY4J_BUDGETS.get(name, REGISTRY_BUILD_PY4J_BUDGET)
     build(spark, sf).schema
     gc.collect()
     with py4j_round_trips() as trips:
         build(spark, sf).schema
-    assert trips.count <= REGISTRY_BUILD_PY4J_BUDGET, (
-        f"{name}: {trips.count} py4j round trips "
-        f"(budget {REGISTRY_BUILD_PY4J_BUDGET})"
+    assert trips.count <= budget, (
+        f"{name}: {trips.count} py4j round trips (budget {budget})"
     )
 
 
