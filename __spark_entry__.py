@@ -282,8 +282,8 @@ def _mh_sql(expr: str, i: int) -> str:
 
 def _minhash_sig_sql(num_hashes: int = 16, source: str = "documents") -> str:
     """(doc_id, sig: list of ``num_hashes`` MinHash values) — DuckDB twin of
-    operators/dedup.minhash_signatures (the Arrow kernel and the expression
-    tier are bit-identical, so one oracle covers both)."""
+    operators/dedup.minhash_signatures (per doc, the min of each family
+    member over its k=3 shingle ids)."""
     mins = ", ".join(f"min({_mh_sql('g', i)})" for i in range(num_hashes))
     return f"""
 SELECT doc_id, [{mins}] AS sig
@@ -5752,7 +5752,7 @@ def q_fingerprint_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         """)
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three components of the 16-hash MinHash signature (oracle-checkable
-    core of the LSH pipeline), via the explode→partial-agg operator."""
+    core of the LSH pipeline), via the Arrow-kernel operator."""
     sigs = DD.minhash_signatures(_t(spark, sf_dir, "documents"), num_hashes=16)
     return sigs.select(
         F.col("id").alias("doc_id"),
@@ -7657,7 +7657,7 @@ def q_build_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # positions come from indexing the same rolling-shingle list the
-# Spark expression tier posexplodes (i-1 → 0-based); islands break
+# Spark position kernel emits (i-1 → 0-based); islands break
 # when the gap between duplicated window starts exceeds k=3
 @register(twin=f"""
             WITH sh AS ({_SHINGLES_SQL}),
@@ -7891,8 +7891,8 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         """)
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition metrics (operators/repetition.py): duplicate
-    token/bigram fractions in-row, most-frequent-bigram share via
-    explode→two-level partial agg."""
+    token/bigram fractions and the most-frequent-bigram share, every count
+    from one shuffle-free Arrow kernel pass."""
     from database2ogr_spark.operators.repetition import repetition_stats
 
     return repetition_stats(

@@ -5,8 +5,8 @@ bounded (<1.5 KB — the driver keeps a 2000-char stdout tail) JSON line:
 "sf": ..., "baseline_r01_subtotal": ..., "worst5_vs_prev_round": ...,
 "full_timings": "BENCH_FULL_r{N}.json"}. The complete per-query dict is
 written to that repo sidecar file, which is the durable per-round record
-(the inline-everything format broke the driver parser in round 5 once the
-headline set reached 178 queries). A run with $SPARK_GRAFT_CPUS below the
+(inlining every per-query time overflowed the 2000-char stdout tail once
+the headline set reached 178 queries). A run with $SPARK_GRAFT_CPUS below the
 CPUs the process may use is a scaling run and writes
 BENCH_FULL_r{N}_c{K}.json instead (see _full_sidecar).
 
@@ -82,11 +82,9 @@ HEADLINE = [
     "dedup_incremental_lsh",
     "webdataset_roundtrip",
     "pretrain_pipeline",
-    # late-round-4 families
     "rolling_features",
     "normalize_text",
     "truncate_to_budget",
-    # round-5 families
     "ann_recall_lsh",
     "gap_fill",
     "training_order",
@@ -240,14 +238,13 @@ BASELINE_R01_SET = frozenset(
 def _calibrate(spark, sf_dir: str) -> dict[str, float]:
     """Machine-calibration probes, recorded per round in the sidecar.
 
-    Round 6→8 showed a uniform +29% wall-clock drift on code-untouched
-    queries; round-9 bisection (isolated 8-pass converged re-runs of the
-    unchanged TPC-H plans reproduced the r8 times, not the r6 times, on an
-    idle machine — see SCALE.md) attributed it to the sandbox itself, but
-    only after the fact. These four numbers make the split measurable at
-    the moment each bench runs: if calibration drifts with the query
-    total, the machine moved; if calibration holds and queries drift, the
-    code did.
+    A uniform +29% wall-clock drift on code-untouched queries was once
+    traced to the machine itself (isolated 8-pass converged re-runs of the
+    unchanged TPC-H plans reproduced the drifted times on an idle machine —
+    see SCALE.md), but only after the fact. These four numbers make the
+    split measurable at the moment each bench runs: if calibration drifts
+    with the query total, the machine moved; if calibration holds and
+    queries drift, the code did.
     - cpu_single_s: one-core Python hash chain (CPython + core freq)
     - cpu_parallel_s: the same work fanned over processes (all cores)
     - scan_s: noop-write of a raw lineitem parquet scan (IO+decode path)
@@ -265,7 +262,7 @@ def _calibrate(spark, sf_dir: str) -> dict[str, float]:
 
     # spawn context: fork from a JVM-hosting driver is a documented hang
     # risk, and a hard-coded pool size measures oversubscription on hosts
-    # with fewer cores (ADVICE r9). Worker count is recorded so
+    # with fewer cores. Worker count is recorded so
     # cross-machine cpu_parallel_s comparisons stay meaningful.
     n_workers = _usable_cpus()
     with mp.get_context("spawn").Pool(n_workers) as pool:
@@ -295,9 +292,9 @@ def _calibrate(spark, sf_dir: str) -> dict[str, float]:
     jvm_agg = _time.perf_counter() - t0
     return {
         "cpu_single_s": round(cpu_single, 3),
-        # NOTE r10: protocol changed (spawn pool, os.cpu_count() workers,
-        # 2x-workers chunks) — not comparable with the r6-r9 fork/16w/32c
-        # values; cpu_workers makes the new protocol self-describing.
+        # protocol: spawn pool, one worker per usable CPU, 2x-workers
+        # chunks — not comparable with values from the older fork pool of
+        # 16 workers; cpu_workers makes the protocol self-describing.
         "cpu_parallel_s": round(cpu_parallel, 3),
         "cpu_workers": n_workers,
         "scan_s": round(scan, 3),
@@ -400,26 +397,25 @@ def main() -> None:
             # the suite — measured 4-10x slowdowns on later queries from the
             # resulting GC pressure. Each query runs against a cold cache,
             # and _release_all_blocks additionally drops localCheckpoint
-            # blocks clearCache cannot see (the r9 instability source).
+            # blocks clearCache cannot see (a measured instability source).
             spark.catalog.clearCache()
             _release_all_blocks(spark)
         per_pass.append(pass_times)
-        # ambient load per pass (VERDICT r9 #7): SCALE.md attributed several
+        # ambient load per pass: SCALE.md attributed several
         # regressions to co-tenant load spikes that were anecdote until now
         pass_loadavg.append(load_before + [round(os.getloadavg()[0], 2)])
     timings = {
         name: round(min(p[name] for p in per_pass), 3) for name in HEADLINE
     }
-    # per-pass spread (VERDICT r9 #1): max/min per query across the
-    # STEADY-STATE passes (2..N), so run-to-run instability is visible IN
-    # the sidecar instead of only when two sidecars disagree. Pass 1 is
-    # excluded from the spread (VERDICT r10 #2): each query's first
-    # execution pays its own whole-stage-codegen + C2 JIT compilation (the
-    # suite warmup covers shared infrastructure, not per-plan generated
-    # code), so including it headlined known-stable queries at 3-4x —
-    # first-pass warm-up, not instability — masking the r9 defect class the
-    # metric exists to catch. min() still aggregates over ALL passes (a
-    # warm-up-inflated pass can only lose). 5 worst spreads inline; the
+    # per-pass spread: max/min per query across the STEADY-STATE passes
+    # (2..N), so run-to-run instability is visible IN the sidecar instead
+    # of only when two sidecars disagree. Pass 1 is excluded from the
+    # spread: each query's first execution pays its own whole-stage-codegen
+    # + C2 JIT compilation (the suite warmup covers shared infrastructure,
+    # not per-plan generated code), so including it headlined known-stable
+    # queries at 3-4x — first-pass warm-up, not instability — masking the
+    # leaked-block instability the metric exists to catch. min() still
+    # aggregates over ALL passes (a warm-up-inflated pass can only lose). 5 worst spreads inline; the
     # full per-pass matrix is recorded too, so the excluded pass stays
     # auditable.
     steady = per_pass[1:] if len(per_pass) > 1 else per_pass
@@ -439,11 +435,11 @@ def main() -> None:
     )
 
     # The driver captures only a bounded stdout TAIL (observed: 2000 chars),
-    # so inlining all per-query timings made BENCH_r05 unparseable once the
-    # headline set outgrew ~50 queries ("parsed": null — VERDICT r5 #3).
-    # Contract since round 6: the full per-query dict goes to a durable repo
-    # sidecar (BENCH_FULL_r{N}.json), and stdout carries ONE bounded line —
-    # totals, the r01-set subtotal, counts, the 5 slowest queries, and the
+    # so inlining all per-query timings made the line unparseable once the
+    # headline set outgrew ~50 queries. Contract: the full per-query dict
+    # goes to a durable repo sidecar (BENCH_FULL_r{N}.json), and stdout
+    # carries ONE bounded line — totals, the baseline-set subtotal, counts,
+    # the 5 slowest queries, and the
     # worst-5 regression ratios vs the previous round's per-query data.
     repo = os.path.dirname(os.path.abspath(__file__))
     this_round, full_name = _full_sidecar(
@@ -518,7 +514,7 @@ def main() -> None:
         payload.pop(drop, None)
         line = json.dumps(payload)
     if len(line) > 1999:
-        # last resort (ADVICE r7): a sliced JSON string is unparseable —
+        # last resort: a sliced JSON string is unparseable —
         # emit a minimal fixed payload instead, never a truncated one
         line = json.dumps(
             {"metric": "headline_queries_total", "value": total,
@@ -573,8 +569,8 @@ def _prev_round_timings(repo: str, this_round: int) -> dict[str, float]:
     """Per-query timings from the most recent prior round, for regression
     ratios. Prefers our BENCH_FULL_r{N}.json sidecars (complete by
     construction); falls back to parsing the JSON line out of the driver's
-    BENCH_r{N}.json 2000-char tail (works through r4; r5's tail was
-    truncated, which is why this function exists)."""
+    BENCH_r{N}.json 2000-char tail (usable only while the tail holds the
+    whole line; a truncated tail is skipped)."""
     import re
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

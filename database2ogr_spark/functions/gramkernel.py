@@ -1,8 +1,8 @@
-"""Arrow-vectorized gram kernel: the production tier of the word-hash /
-shingle machinery in ``functions/hashing.py``.
+"""Arrow-vectorized gram kernel: the execution tier of the word-hash /
+shingle machinery specified in ``functions/hashing.py``.
 
 Same math, different execution tier. Every value produced here is
-bit-identical to the Column-expression implementations (one md5 per word →
+bit-identical to the Column-expression specs (one md5 per word →
 two 31-bit hashes from disjoint digest halves → rolling k-gram Horner hashes
 mod 2^31-1 → 62-bit gram ids / MinHash family members / SimHash votes), so
 the DuckDB oracle contracts hold unchanged. What changes is *where* the
@@ -20,8 +20,10 @@ signature / vote arithmetic is vectorized over a single flattened
 token-hash array with document offsets, so per-token Python cost is
 amortized to near zero.
 
-The expression implementations remain the no-Python-worker fallback and the
-readable specification; operators take ``use_arrow=False`` to select them.
+The expression specs in ``functions/hashing.py`` stay as the readable
+reference: tests/test_gramkernel.py compares every table here with them
+in-row. The gram operators (``operators/dedup.py``,
+``operators/repetition.py``) run only this kernel.
 
 Reference parity: the reference has no text machinery at all (it is a
 geospatial exporter, `src/from-ground-up.js`); this belongs to the
@@ -79,7 +81,7 @@ def _tokenize_and_hash(texts: pd.Series) -> tuple[np.ndarray, np.ndarray, np.nda
     cache = _WORD_CACHE
     for i, t in enumerate(texts):
         if t:
-            for w in _WS.sub(" ", t.lower()).strip().split(" "):
+            for w in _WS.sub(" ", t.lower()).split(" "):
                 if not w:
                     continue
                 hw = cache.get(w)
@@ -259,9 +261,9 @@ def distinct_gram_table(
 def minhash_signature_table(
     df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int
 ) -> DataFrame:
-    """(id, sig array<bigint>) — kernel twin of
-    ``operators/dedup.minhash_signatures`` (same affine family over the same
-    rolling shingle chains; identical signatures)."""
+    """(id, sig array<bigint>) — the kernel behind
+    ``operators/dedup.minhash_signatures``: per document, the min of each
+    ``hashing.minhash_member`` over its ``shingle_structs_of`` chains."""
     id_type = dict(df.dtypes)[id_col]
     coeffs = minhash_coeffs(num_hashes)
 
@@ -291,11 +293,9 @@ def repetition_counts_table(
 
     (id, n_tokens, nd_tokens, n_bigrams, nd_bigrams, top_ngram_count,
     total_ngrams). The fraction/rounding arithmetic stays in Column
-    expressions (``operators/repetition.py``) so the results stay
-    bit-identical with the expression tier and the oracle. Replaces the
-    explode → groupBy(id, gram) → groupBy(id) → join pipeline — the
-    most-frequent-gram count is a per-document statistic and never needed a
-    shuffle at all.
+    expressions (``operators/repetition.py``), the same arithmetic the
+    DuckDB oracle replays. The most-frequent-gram count is a per-document
+    statistic, so no shuffle is needed at all.
     """
     id_type = dict(df.dtypes)[id_col]
 
@@ -350,9 +350,10 @@ def repetition_counts_table(
 
 
 def simhash_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, sim) — kernel twin of ``operators/dedup.simhash_signatures``:
-    60-bit SimHash, bit j set iff the majority of token hashes have bit j set
-    (strictly: 2·popcount_j > n). Empty documents → 0."""
+    """(id, sim) — the kernel behind ``operators/dedup.simhash_signatures``
+    and the value of ``hashing.simhash64(words(text))``: 60-bit SimHash, bit
+    j set iff the majority of token hashes have bit j set (strictly:
+    2·popcount_j > n). Empty documents → 0."""
     id_type = dict(df.dtypes)[id_col]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

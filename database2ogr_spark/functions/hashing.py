@@ -10,7 +10,10 @@ Two tiers:
   where cross-engine parity is not needed (same semantics, faster).
 
 Shingling / MinHash / SimHash are built purely from higher-order functions on
-these hashes — no UDFs, no shuffle until the caller groups/joins.
+these hashes — no UDFs, no shuffle until the caller groups/joins. The gram
+operators run the Arrow kernel of ``functions/gramkernel.py``; these
+expressions are its readable spec, which tests/test_gramkernel.py compares
+it with in-row.
 """
 
 from __future__ import annotations

@@ -36,18 +36,12 @@ The plans of those eager jobs are read back with
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from database2ogr_spark.functions.hashing import (
-    hamming64,
-    stable_hash64,
-    words,
-)
+from database2ogr_spark.functions.hashing import hamming64, stable_hash64
 from database2ogr_spark.functions.textstats import content_fingerprint
 from database2ogr_spark.operators.partitioning import finalize_lifecycle, spread
 
@@ -63,8 +57,7 @@ def _guarded_gram_table(
     """Persisted distinct-gram table (id, shingle, n) for the inverted-index
     pair operators, with the hot-shingle ``max_df`` guard applied — the
     shared kernel behind :func:`ngram_jaccard_pairs` and
-    :func:`containment_pairs` (VERDICT r9 #2: the containment self-join
-    shipped without the guard its sibling had).
+    :func:`containment_pairs`.
 
     A shingle occurring in d documents contributes d·(d-1)/2 join rows to a
     shingle-keyed self-join, so one boilerplate shingle with df=10⁶ is a
@@ -211,51 +204,19 @@ def minhash_signatures(
     *,
     k_shingle: int = 3,
     num_hashes: int = 16,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """MinHash signatures as a DataFrame (id, sig: array<bigint>).
 
-    Default tier is the Arrow kernel (``functions/gramkernel.py``): one
-    ``mapInPandas`` pass, numpy arithmetic, zero shuffle — signatures are
-    bit-identical to the expression tier below (same md5 halves, same
-    rolling chains, same affine family), so the oracle contract is
-    unchanged. ``use_arrow=False`` selects the pure-Column tier: each word
-    crypto-hashed ONCE (``word_hash_structs``), shingle structs exploded so
-    the shingling expression evaluates once per document, partial
-    aggregation reducing to per-doc mins before a single shuffle of
-    ``num_hashes`` bigints per doc.
+    Computed by the Arrow kernel (``functions/gramkernel.py``): one
+    ``mapInPandas`` pass, numpy arithmetic, zero shuffle. Each signature
+    equals the in-row spec of ``functions/hashing.py`` (the min of
+    ``minhash_member`` over ``shingle_structs_of(word_hash_structs(text))``,
+    pinned in tests/test_gramkernel.py), so the DuckDB oracle replays it.
     """
-    if use_arrow:
-        from database2ogr_spark.functions.gramkernel import minhash_signature_table
+    from database2ogr_spark.functions.gramkernel import minhash_signature_table
 
-        return minhash_signature_table(
-            spread(df), id_col, text_col, k_shingle, num_hashes
-        )
-
-    from database2ogr_spark.functions.hashing import (
-        minhash_coeffs,
-        minhash_member,
-        shingle_structs_of,
-        word_hash_structs,
-    )
-
-    # word hashes staged in their own projection — load-bearing, see the
-    # shingle_structs_of docstring (inline = per-shingle re-hashing)
-    staged = spread(df).select(
-        F.col(id_col).alias("id"), word_hash_structs(text_col).alias("wh")
-    )
-    ex = staged.select(
-        "id", F.explode(shingle_structs_of(F.col("wh"), k_shingle)).alias("s")
-    )
-    st = ex.select("id", F.col("s.s1").alias("s1"), F.col("s.s2").alias("s2"))
-    agg = st.groupBy("id").agg(
-        *[
-            F.min(minhash_member(F.col("s1"), F.col("s2"), c)).alias(f"h{i}")
-            for i, c in enumerate(minhash_coeffs(num_hashes))
-        ]
-    )
-    return agg.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
+    return minhash_signature_table(
+        spread(df), id_col, text_col, k_shingle, num_hashes
     )
 
 
@@ -301,7 +262,6 @@ def minhash_band_table(
     k_shingle: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """The LSH index rows (id, sig, band, bucket) for ``df`` — the STORE
     format of :func:`dedup_incremental_lsh`. At scale, write it as a table
@@ -309,8 +269,7 @@ def minhash_band_table(
     ingestion probe join is co-located and shuffle-free."""
     assert num_hashes % bands == 0
     sigs = minhash_signatures(
-        df, id_col, text_col, k_shingle=k_shingle, num_hashes=num_hashes,
-        use_arrow=use_arrow,
+        df, id_col, text_col, k_shingle=k_shingle, num_hashes=num_hashes
     )
     return _banded(sigs, bands, num_hashes // bands)
 
@@ -325,7 +284,6 @@ def dedup_incremental_lsh(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Ingestion-time NEAR-duplicate dedup against an LSH signature store —
     the fuzzy twin of :func:`dedup_incremental` (which catches only exact
@@ -355,7 +313,6 @@ def dedup_incremental_lsh(
     batch = minhash_band_table(
         new_docs, id_col, text_col,
         k_shingle=k_shingle, num_hashes=num_hashes, bands=bands,
-        use_arrow=use_arrow,
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
     def est(l: str, r: str):
@@ -406,7 +363,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Near-dup candidate pairs via MinHash LSH, scored by signature overlap.
 
@@ -423,8 +379,7 @@ def minhash_lsh_pairs(
     assert num_hashes % bands == 0
 
     sigs = minhash_signatures(
-        df, id_col, text_col, k_shingle=k_shingle, num_hashes=num_hashes,
-        use_arrow=use_arrow,
+        df, id_col, text_col, k_shingle=k_shingle, num_hashes=num_hashes
     ).persist(StorageLevel.MEMORY_AND_DISK)
     banded = _banded(sigs, bands, num_hashes // bands)
 
@@ -468,19 +423,19 @@ def decontaminate(
     *,
     k: int = 13,
     broadcast_benchmark: bool = True,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: drop corpus docs sharing ANY word k-gram
     with any benchmark doc (the standard 13-gram overlap rule used by
     large-corpus training pipelines).
 
-    Both sides shingle through the same staged word-hash machinery as MinHash
-    (one md5 per word, integer rolling k-gram ids — no k-gram strings), so
-    the match key is an 8-byte bigint. The benchmark gram set is tiny
-    relative to the corpus (eval suites vs 100 TB), so it broadcasts by
-    default and contamination testing is a map-side semi-join — the corpus
-    is never shuffled at all; set ``broadcast_benchmark=False`` if the
-    blocklist outgrows executor memory and let it shuffle-join.
+    Both sides shingle through the Arrow gram kernel
+    (``gramkernel.distinct_gram_table``: one md5 per word, integer rolling
+    k-gram ids — no k-gram strings), so the match key is an 8-byte bigint.
+    The benchmark gram set is tiny relative to the corpus (eval suites vs
+    100 TB), so it broadcasts by default and contamination testing is a
+    map-side semi-join — the corpus is never shuffled at all; set
+    ``broadcast_benchmark=False`` if the blocklist outgrows executor memory
+    and let it shuffle-join.
 
     Docs with fewer than k words contribute one whole-doc gram (the shingle
     fallback): such a doc is only flagged when the benchmark contains the
@@ -488,26 +443,10 @@ def decontaminate(
 
     Returns the surviving corpus rows (original schema).
     """
-    from database2ogr_spark.functions.hashing import (
-        shingle_ids_of,
-        shingle_structs_of,
-        word_hash_structs,
-    )
+    from database2ogr_spark.functions.gramkernel import distinct_gram_table
 
     def grams(df: DataFrame) -> DataFrame:
-        if use_arrow:
-            from database2ogr_spark.functions.gramkernel import distinct_gram_table
-
-            return distinct_gram_table(spread(df), id_col, text_col, k)
-        staged = df.select(
-            F.col(id_col).alias("id"), word_hash_structs(text_col).alias("wh")
-        )  # staged projection is load-bearing — see shingle_structs_of
-        return staged.select(
-            "id",
-            F.explode(
-                F.array_distinct(shingle_ids_of(shingle_structs_of(F.col("wh"), k)))
-            ).alias("gram"),
-        )
+        return distinct_gram_table(spread(df), id_col, text_col, k)
 
     bench_grams = grams(benchmark).select("gram").distinct()
     if broadcast_benchmark:
@@ -646,63 +585,20 @@ def decontaminate_bloom(
 
 
 def simhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    *, use_arrow: bool = True,
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """60-bit SimHash signatures as a DataFrame (id, sim: bigint).
 
-    Default tier is the Arrow kernel (``functions/gramkernel.simhash_table``):
+    Computed by the Arrow kernel (``functions/gramkernel.simhash_table``):
     one shuffle-free ``mapInPandas`` pass, per-bit votes as one vectorized
-    ``reduceat`` over the flat token-hash array — identical signatures.
-
-    The ``use_arrow=False`` tier keeps the same explode→partial-agg shape as
-    :func:`minhash_signatures`: each token hashed exactly once, the 60
-    per-bit ±1 votes summed map-side (partial aggregation), only 60 small
-    ints per doc crossing the shuffle. (The pure in-row expression form,
-    ``functions.hashing.simhash64``, re-evaluates the token-hash array inside
-    every per-bit vote — 60× the hashing work — and is kept only for small
-    in-row arrays.)
-
-    Documents with no tokens get signature 0 (explode_outer keeps them; null
-    hash votes negative on every bit), matching ``simhash64`` on an empty
-    array.
+    ``reduceat`` over the flat token-hash array. Each signature equals the
+    in-row spec ``functions.hashing.simhash64(words(text))`` (bit j set iff
+    more than half the token hashes have it; pinned in
+    tests/test_gramkernel.py). Documents with no tokens get signature 0.
     """
-    if use_arrow:
-        from database2ogr_spark.functions.gramkernel import simhash_table
+    from database2ogr_spark.functions.gramkernel import simhash_table
 
-        return simhash_table(spread(df), id_col, text_col)
-
-    ex = spread(df).select(
-        F.col(id_col).alias("id"), F.explode_outer(words(text_col)).alias("w")
-    )
-    h = ex.select("id", stable_hash64(F.col("w")).alias("h"))
-
-    # Pack 4 bit-popcounts per aggregate column (16-bit lanes): 15 sum columns
-    # instead of 60 keeps the generated aggregate code small, and building
-    # each expression as ONE SQL string (F.expr) instead of dozens of chained
-    # Column calls avoids ~3s of py4j round-trips at plan-construction time.
-    # Lanes can't overflow below 65536 tokens/doc. bit j of the signature is
-    # set iff its popcount p_j satisfies 2*p_j > n (same as the +1/-1 vote
-    # sum > 0 of the definitional form in functions/hashing.simhash64).
-    def packed(g: int):  # bits 4g..4g+3 → lanes 0..3
-        lanes = " + ".join(
-            f"(shiftleft(shiftright(h, {4 * g + f}) & 1, {16 * f}))" for f in range(4)
-        )
-        return F.expr(f"sum({lanes})").alias(f"p{g}")
-
-    votes = h.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n"), *[packed(g) for g in range(15)]
-    )
-
-    def bit(j: int) -> str:
-        g, f = divmod(j, 4)
-        return (
-            f"(CASE WHEN (shiftright(p{g}, {16 * f}) & 65535) * 2 > n "
-            f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        )
-
-    sim = F.expr(" + ".join(bit(j) for j in range(60)))
-    return votes.select("id", sim.alias("sim"))
+    return simhash_table(spread(df), id_col, text_col)
 
 
 def simhash_pairs(
@@ -711,7 +607,6 @@ def simhash_pairs(
     text_col: str = "text",
     *,
     max_hamming: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming ≤ max_hamming — complete for any
     threshold.
@@ -734,7 +629,7 @@ def simhash_pairs(
     base, extra = divmod(sig_bits, n_chunks)
     widths = [base + (1 if i < extra else 0) for i in range(n_chunks)]
     offsets = [sum(widths[:i]) for i in range(n_chunks)]
-    sigs = simhash_signatures(df, id_col, text_col, use_arrow=use_arrow).persist(
+    sigs = simhash_signatures(df, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     chunks = sigs.select(
@@ -785,19 +680,20 @@ def ngram_jaccard_pairs(
     *,
     k_shingle: int = 3,
     threshold: float = 0.5,
-    use_arrow: bool = True,
     max_df: int | None = None,
     hot_broadcast_limit: int = 5_000_000,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs that share ≥1 shingle.
 
-    Inverted-index join: explode distinct shingle ids, self-join on shingle,
-    count shared per pair, then |A∩B| / (|A| + |B| - |A∩B|). Never builds the
-    full cross product; the explode size is Σ doc shingles (linear in corpus).
-    Shingle identity is the 62-bit ``shingle_ids`` rolling hash — an 8-byte
-    join key instead of a k-word string, and no k-gram string
-    materialization. The shingle table comes from the Arrow kernel by default
-    (identical ids; ``use_arrow=False`` selects the Column-expression tier).
+    Inverted-index join: the distinct shingle ids of each document (Arrow
+    kernel, :func:`_guarded_gram_table`), self-joined on shingle, shared
+    count per pair, then |A∩B| / (|A| + |B| - |A∩B|). Never builds the
+    full cross product; the gram table is Σ doc shingles (linear in
+    corpus). Shingle identity is the 62-bit rolling hash of
+    ``functions/hashing.shingle_ids_of`` — an 8-byte join key, no k-gram
+    strings. Every gram row carries its document's distinct-gram count n
+    (free in-kernel), so the |A|/|B| terms ride the self-join instead of
+    needing a sizes aggregation plus two joins back onto the pairs.
 
     ``max_df`` is the hot-shingle guard the self-join needs at scale: a
     shingle occurring in d documents contributes d·(d-1)/2 join rows, so one
@@ -810,97 +706,39 @@ def ngram_jaccard_pairs(
     by max_df² per shingle. The offender list (tiny by construction) is
     masked in-kernel via a driver broadcast up to ``hot_broadcast_limit``
     entries (~8 B each); beyond that, a distributed anti-join fallback with
-    AQE-chosen strategy takes over (identical results — equivalence pinned
-    in tests/test_dedup.py).
+    AQE-chosen strategy takes over (both equal the spec-computed pairs —
+    pinned in tests/test_dedup.py).
     """
-    from database2ogr_spark.functions.hashing import (
-        shingle_ids_of,
-        shingle_structs_of,
-        word_hash_structs,
+    sh, owned = _guarded_gram_table(
+        df, id_col, text_col, k_shingle, max_df, hot_broadcast_limit
     )
-
-    if use_arrow:
-        # shared guarded inverted-index kernel (see _guarded_gram_table):
-        # each row carries the doc's distinct-gram count n (free
-        # in-kernel), so the |A|/|B| terms ride the self-join instead of
-        # needing a sizes aggregation plus two joins back onto the pairs
-        sh, owned = _guarded_gram_table(
-            df, id_col, text_col, k_shingle, max_df, hot_broadcast_limit
-        )
-        shared = (
-            sh.alias("l")
-            .join(
-                sh.alias("r"),
-                (F.col("l.shingle") == F.col("r.shingle"))
-                & (F.col("l.id") < F.col("r.id")),
-            )
-            .groupBy(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-            .agg(
-                F.count(F.lit(1)).alias("shared"),
-                F.min(F.col("l.n")).alias("n_a"),
-                F.min(F.col("r.n")).alias("n_b"),
-            )
-        )
-        pairs = (
-            shared.withColumn(
-                "jaccard",
-                F.round(
-                    F.col("shared").cast("double")
-                    / (F.col("n_a") + F.col("n_b") - F.col("shared")).cast("double"),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-        return finalize_lifecycle(pairs, owned)
-    else:
-        staged = spread(df).select(
-            F.col(id_col).alias("id"), word_hash_structs(text_col).alias("wh")
-        )  # staged projection is load-bearing — see shingle_structs_of docstring
-        sh = staged.select(
-            "id",
-            F.explode(
-                F.array_distinct(
-                    shingle_ids_of(shingle_structs_of(F.col("wh"), k_shingle))
-                )
-            ).alias("shingle"),
-        )
-        if max_df is not None:
-            hot = (
-                sh.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") > max_df)
-                .select("shingle")
-            )
-            sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-        # read by both join sides and the sizes agg — 3 recomputes otherwise
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-
     shared = (
         sh.alias("l")
-        .join(sh.alias("r"), (F.col("l.shingle") == F.col("r.shingle")) & (F.col("l.id") < F.col("r.id")))
+        .join(
+            sh.alias("r"),
+            (F.col("l.shingle") == F.col("r.shingle"))
+            & (F.col("l.id") < F.col("r.id")),
+        )
         .groupBy(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
+        .agg(
+            F.count(F.lit(1)).alias("shared"),
+            F.min(F.col("l.n")).alias("n_a"),
+            F.min(F.col("r.n")).alias("n_b"),
+        )
     )
-    # sizes is one row per doc — NOT broadcastable at corpus scale; these are
-    # shuffle joins on the pair ids and AQE may still broadcast at small SF.
-    jac = (
-        shared.join(sizes.alias("sa"), F.col("id_a") == F.col("sa.id"))
-        .join(sizes.alias("sb"), F.col("id_b") == F.col("sb.id"))
-        .withColumn(
+    pairs = (
+        shared.withColumn(
             "jaccard",
             F.round(
                 F.col("shared").cast("double")
-                / (F.col("sa.n_shingles") + F.col("sb.n_shingles") - F.col("shared")).cast("double"),
+                / (F.col("n_a") + F.col("n_b") - F.col("shared")).cast("double"),
                 6,
             ),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return finalize_lifecycle(jac, [sh])
+    return finalize_lifecycle(pairs, owned)
 
 
 def duplicate_spans(
@@ -911,7 +749,6 @@ def duplicate_spans(
     k_shingle: int = 13,
     min_docs: int = 2,
     merge_gap: int | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Substring-level exact duplicate detection — the span-granular member
     of the dedup family (public Lee et al. 2022, "Deduplicating Training
@@ -928,47 +765,25 @@ def duplicate_spans(
     are *counted*, never self-joined, so cost is linear in total windows
     regardless of how hot a phrase is (the shape that lets this run where
     ngram_jaccard_pairs needs its max_df guard). Three linear shuffles:
-    (1) distinct (gram, doc) + df count on the gram key, (2) the
-    positions⋈duplicated-grams equi-join (AQE broadcasts the gram list
-    when small), (3) the per-doc gaps-and-islands window on doc id. The
-    gram ids are the same md5 rolling hashes as the rest of the family, so
-    the DuckDB oracle replays spans exactly. The position table comes from
-    the Arrow kernel by default (identical ids and positions;
-    ``use_arrow=False`` selects the Column-expression spec tier —
-    equivalence pinned in tests/test_dedup.py).
+    (1) the df count on the gram key over each (doc, gram) first
+    occurrence, (2) the positions⋈duplicated-grams equi-join (AQE
+    broadcasts the gram list when small), (3) the per-doc gaps-and-islands
+    window on doc id. The position table comes from the Arrow kernel
+    (``gramkernel.gram_position_table``: the md5 rolling-hash ids of the
+    family at their window starts), so the DuckDB oracle replays spans
+    exactly.
     """
-    from pyspark.sql.window import Window
+    from database2ogr_spark.functions.gramkernel import gram_position_table
 
     gap = k_shingle if merge_gap is None else merge_gap
-    if use_arrow:
-        from database2ogr_spark.functions.gramkernel import gram_position_table
-
-        # the kernel marks each (doc, gram) first occurrence, so the df
-        # count below filters instead of paying a distinct shuffle
-        pos_table = gram_position_table(spread(df), id_col, text_col, k_shingle)
-    else:
-        from database2ogr_spark.functions.hashing import (
-            shingle_ids_of,
-            shingle_structs_of,
-            word_hash_structs,
-        )
-
-        staged = spread(df).select(
-            F.col(id_col).alias("id"), word_hash_structs(text_col).alias("wh")
-        )  # staged projection is load-bearing — see shingle_structs_of docstring
-        pos_table = staged.select(
-            "id",
-            F.posexplode(
-                shingle_ids_of(shingle_structs_of(F.col("wh"), k_shingle))
-            ).alias("pos", "gram"),
-        )
     # read by the df-count agg AND the join side — persist (released per
-    # the module lifecycle contract)
-    pos_table = pos_table.persist(StorageLevel.MEMORY_AND_DISK)
-    if "first" in pos_table.columns:
-        per_doc_grams = pos_table.filter(F.col("first")).select("gram", "id")
-    else:
-        per_doc_grams = pos_table.select("gram", "id").distinct()
+    # the module lifecycle contract); the kernel marks each (doc, gram)
+    # first occurrence, so the df count filters instead of paying a
+    # distinct shuffle
+    pos_table = gram_position_table(spread(df), id_col, text_col, k_shingle).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    per_doc_grams = pos_table.filter(F.col("first")).select("gram", "id")
     dup_grams = (
         per_doc_grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -1300,12 +1115,10 @@ def containment_pairs(
     jaccard) is directly filterable.
 
     Same inverted-index join, Arrow gram kernel, AND hot-shingle guard as
-    :func:`ngram_jaccard_pairs` — both feed off :func:`_guarded_gram_table`
-    (VERDICT r9 #2: this operator used to defer the guard to the caller,
-    leaving its self-join per-key quadratic on a boilerplate shingle;
-    ``max_df`` now bounds the within-bucket quadratic to max_df² exactly
-    like its sibling, with identical guarded semantics — scores become the
-    exact containment/Jaccard of the df-filtered shingle sets).
+    :func:`ngram_jaccard_pairs` — both feed off :func:`_guarded_gram_table`:
+    ``max_df`` bounds the within-bucket quadratic to max_df² exactly like
+    its sibling, with identical guarded semantics — scores are the exact
+    containment/Jaccard of the df-filtered shingle sets.
 
     Output: (id_a, id_b, n_a, n_b, shared, containment, jaccard) for
     pairs with containment ≥ ``threshold``; scores rounded 6.

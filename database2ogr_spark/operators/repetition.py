@@ -9,26 +9,18 @@ Reference parity: the reference engine has no text-quality surface
 the beyond-reference training-data operators (BASELINE.json north star),
 sibling to `functions/textstats.py`.
 
-Scale design: n-gram identity is the same staged word-hash + rolling-hash
+Scale design: n-gram identity is the same word-hash + rolling-hash
 arithmetic as MinHash (`functions/hashing.py` — one md5 per word, everything
-else integer ops, no n-gram strings). The duplicate fractions are pure
-in-row expressions (no shuffle); the most-frequent-gram stats explode gram
-ids and reduce with TWO partial-agg groupBys on the same ``id`` key — Spark
-plans a single exchange for both because the second groupBy's partitioning
-is a prefix of the first's output. Per-doc payload crossing the wire is a
-few bigints regardless of document size.
+else integer ops, no n-gram strings). Every per-document count comes from
+one shuffle-free Arrow pass (`functions/gramkernel.repetition_counts_table`);
+the fractions are Column arithmetic over those counts, so no groupBy or
+join runs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from database2ogr_spark.functions.hashing import (
-    shingle_ids_of,
-    shingle_structs_of,
-    word_hash_structs,
-)
 
 
 def repetition_stats(
@@ -37,7 +29,6 @@ def repetition_stats(
     text_col: str = "text",
     *,
     top_n: int = 2,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-document repetition metrics:
 
@@ -50,104 +41,38 @@ def repetition_stats(
 
     Fractions are rounded to 6 places (oracle parity).
 
-    Default tier: the Arrow kernel computes every COUNT per document in one
-    shuffle-free ``mapInPandas`` pass (the most-frequent-gram count is a
-    per-document statistic — it never needed the explode → groupBy → join
-    pipeline of the expression tier); the fraction/rounding arithmetic is
-    shared Column expressions, so both tiers are bit-identical.
+    The Arrow kernel computes every COUNT per document in one shuffle-free
+    ``mapInPandas`` pass (the most-frequent-gram count is a per-document
+    statistic, so it needs no explode, groupBy or join); the counts equal
+    in-row specs over ``functions/hashing.py`` gram ids (pinned in
+    tests/test_gramkernel.py).
     """
-    if use_arrow:
-        from database2ogr_spark.functions.gramkernel import repetition_counts_table
-        from database2ogr_spark.operators.partitioning import spread
+    from database2ogr_spark.functions.gramkernel import repetition_counts_table
+    from database2ogr_spark.operators.partitioning import spread
 
-        c = repetition_counts_table(spread(df), id_col, text_col, top_n)
+    c = repetition_counts_table(spread(df), id_col, text_col, top_n)
 
-        def frac(num, den):
-            return F.round(
-                F.lit(1.0) - num.cast("double") / den.cast("double"), 6
-            )
-
-        return c.select(
-            F.col("id").alias(id_col),
-            F.col("n_tokens").cast("int").alias("n_tokens"),
-            F.when(F.col("n_tokens") > 0, frac(F.col("nd_tokens"), F.col("n_tokens")))
-            .otherwise(F.lit(0.0)).alias("dup_token_frac"),
-            F.when(F.col("n_bigrams") > 0, frac(F.col("nd_bigrams"), F.col("n_bigrams")))
-            .otherwise(F.lit(0.0)).alias("dup_bigram_frac"),
-            F.col("top_ngram_count"),
-            F.when(
-                F.col("total_ngrams") > 0,
-                F.round(
-                    F.col("top_ngram_count").cast("double")
-                    / F.col("total_ngrams").cast("double"),
-                    6,
-                ),
-            ).otherwise(F.lit(0.0)).alias("top_ngram_frac"),
+    def frac(num, den):
+        return F.round(
+            F.lit(1.0) - num.cast("double") / den.cast("double"), 6
         )
-    staged = df.select(
-        F.col(id_col).alias("id"), word_hash_structs(text_col).alias("wh")
-    )  # staged projection is load-bearing — see shingle_structs_of
 
-    wh = F.col("wh")
-    word_ids = F.transform(
-        wh, lambda w: w["h1"] * F.lit(1 << 31).cast("bigint") + w["h2"]
-    )
-    bigram_ids = shingle_ids_of(shingle_structs_of(wh, 2))
-
-    def dup_frac(ids, min_tokens: int):
-        total = F.size(ids)
-        return F.when(
-            (F.size(wh) >= min_tokens) & (total > 0),
+    return c.select(
+        F.col("id").alias(id_col),
+        F.col("n_tokens").cast("int").alias("n_tokens"),
+        F.when(F.col("n_tokens") > 0, frac(F.col("nd_tokens"), F.col("n_tokens")))
+        .otherwise(F.lit(0.0)).alias("dup_token_frac"),
+        F.when(F.col("n_bigrams") > 0, frac(F.col("nd_bigrams"), F.col("n_bigrams")))
+        .otherwise(F.lit(0.0)).alias("dup_bigram_frac"),
+        F.col("top_ngram_count"),
+        F.when(
+            F.col("total_ngrams") > 0,
             F.round(
-                F.lit(1.0)
-                - F.size(F.array_distinct(ids)).cast("double") / total.cast("double"),
+                F.col("top_ngram_count").cast("double")
+                / F.col("total_ngrams").cast("double"),
                 6,
             ),
-        ).otherwise(F.lit(0.0))
-
-    inrow = staged.select(
-        "id",
-        F.size(wh).alias("n_tokens"),
-        dup_frac(word_ids, 1).alias("dup_token_frac"),
-        dup_frac(bigram_ids, 2).alias("dup_bigram_frac"),
-    )
-
-    # most-frequent top_n-gram: explode gram ids, count per (doc, gram),
-    # then max/sum per doc — docs with < top_n tokens produce no grams here
-    # (no shingle fallback: a whole-doc fallback gram would fake a repetition
-    # count of 1) and are restored by the left join below.
-    top_ids = F.when(
-        F.size(wh) >= top_n, shingle_ids_of(shingle_structs_of(wh, top_n))
-    ).otherwise(F.array().cast("array<bigint>"))
-    gram_counts = (
-        staged.select("id", F.explode(top_ids).alias("gram"))
-        .groupBy("id", "gram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    top = gram_counts.groupBy("id").agg(
-        F.max("cnt").alias("top_ngram_count"),
-        F.sum("cnt").alias("total_ngrams"),
-    )
-
-    return (
-        inrow.join(top, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            "n_tokens",
-            "dup_token_frac",
-            "dup_bigram_frac",
-            F.coalesce(F.col("top_ngram_count"), F.lit(0)).alias("top_ngram_count"),
-            F.when(
-                F.col("total_ngrams") > 0,
-                F.round(
-                    F.col("top_ngram_count").cast("double")
-                    / F.col("total_ngrams").cast("double"),
-                    6,
-                ),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("top_ngram_frac"),
-        )
+        ).otherwise(F.lit(0.0)).alias("top_ngram_frac"),
     )
 
 
@@ -238,10 +163,10 @@ def char_entropy(
     Scale: the explode is per-CHARACTER, so the shuffled key stream is
     corpus-character-sized — but it reduces immediately on (id, char) with
     map-side partial aggregation, and the second per-id reduce shares the
-    same exchange prefix (one shuffle total, same plan shape as
-    ``repetition_stats``). For a pure no-shuffle path at extreme scale the
-    per-doc counting can move into an Arrow kernel (one ``mapInPandas``
-    pass, counts in-kernel — the ``functions/gramkernel`` pattern); the
+    same exchange prefix (one shuffle total). For a pure no-shuffle path
+    at extreme scale the per-doc counting can move into an Arrow kernel
+    (one ``mapInPandas`` pass, counts in-kernel — what
+    :func:`repetition_stats` does via ``functions/gramkernel``); the
     declarative form here keeps the arithmetic oracle-replayable.
     """
     chars = df.select(

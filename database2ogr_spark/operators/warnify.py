@@ -9,8 +9,7 @@ choices are the contract and the oracle encodes them):
 
 (a) group key: the stringified geometry coordinates, exactly like the
     reference (``join(', ')``, ``src/from-ground-up.js:224-234``) — it proxies
-    for the decision-point identity lost in the join projection. A saner
-    id-keyed variant is supported via ``key_col``.
+    for the decision-point identity lost in the join projection.
 (b) carry-over columns (id, name, area_id, comments): the reference is
     last-write-wins in JS object iteration order (``:252-256``) — pinned here
     as MIN over the group (deterministic, distribution-safe, SQL-expressible).
@@ -71,36 +70,27 @@ def warnify_columns(
     *,
     warnings: str = "json",
     carry_cols: tuple[str, ...] = ("id", "name", "area_id", "comments"),
-    warning_col: str = "warning",
-    type_col: str = "type",
-    geometry_col: str = "geometry",
-    key_col: str | None = None,
-    rebuild_point: bool = True,
     geometry_format: str = "geojson",
 ) -> Grouping:
-    """Build the Columns of one warnify configuration. Holds the single
+    """Build the Columns of one warnify configuration over the joined
+    ``warning``, ``type`` and ``geometry`` columns. Holds the single
     authoritative copy of the pinned grouping semantics (module docstring
     (a)-(c)); ``warnings`` picks the serialization of the pivoted lists:
-    ``"json"`` (:func:`warnify`), ``"html"`` (:func:`warnify_html`) or
-    ``"lists"`` (:func:`warnify_raw`, the two array columns
-    ``managing_risk`` and ``concern``)."""
-    key = F.col(key_col) if key_col else G.coords_key(geometry_col)
+    ``"json"`` (:func:`warnify`) or ``"html"`` (:func:`warnify_html`)."""
     aggs = (
-        *pivoted_warning_lists(F.col(warning_col), F.col(type_col)),
+        *pivoted_warning_lists(F.col("warning"), F.col("type")),
         *[F.min(c).alias(c) for c in carry_cols],
         F.min("table").alias("table"),
     )
-    geometry = _rebuild_point(geometry_format) if rebuild_point else F.col("__key")
-    out = [F.col(c) for c in (*carry_cols, "table")] + [geometry.alias("geometry")]
-    if warnings == "lists":
-        out = [F.col("managing_risk"), F.col("concern"), *out]
-    elif warnings == "json":
+    out = [F.col(c) for c in (*carry_cols, "table")]
+    out.append(_rebuild_point(geometry_format).alias("geometry"))
+    if warnings == "json":
         out.append(_warnings_json().alias("warnings"))
     elif warnings == "html":
         out.append(_warnings_html().alias("warnings"))
     else:
-        raise ValueError(f"warnings must be json, html or lists, not {warnings!r}")
-    return Grouping(key.alias("__key"), aggs, tuple(out))
+        raise ValueError(f"warnings must be json or html, not {warnings!r}")
+    return Grouping(G.coords_key("geometry").alias("__key"), aggs, tuple(out))
 
 
 def warnify(df: DataFrame, **kwargs) -> DataFrame:
@@ -184,10 +174,3 @@ def _warnings_html() -> Column:
         F.lit("<tr></tbody></table>"),
     )
     return F.concat(F.lit(_POPUP_META), table)
-
-
-def warnify_raw(df: DataFrame, **kwargs) -> DataFrame:
-    """Like :func:`warnify` but keeps the pivoted lists as array columns
-    (``managing_risk``, ``concern``) for callers that serialize
-    differently."""
-    return warnify_columns(warnings="lists", **kwargs).apply(df)

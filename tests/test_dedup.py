@@ -61,30 +61,69 @@ def test_ngram_jaccard_exact_values(spark):
 
 
 def test_ngram_jaccard_guard_paths_equivalent(spark):
-    # the max_df guard has three implementations that must agree exactly:
-    # in-kernel searchsorted mask (default), distributed anti-join fallback
-    # (forced via hot_broadcast_limit=0), and the expression tier. Corpus
-    # crafted so the guard bites: a shingle shared by ALL docs (df=6 > 2).
+    # the max_df guard has two implementations — in-kernel searchsorted mask
+    # (default) and distributed anti-join fallback (forced via
+    # hot_broadcast_limit=0) — and both must equal the pairs computed here
+    # from the spec gram sets of functions/hashing.py. Corpus crafted so
+    # the guard bites: a shingle shared by ALL docs (df=6 > 2).
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from pyspark.sql import functions as F
+
+    from database2ogr_spark.functions.hashing import (
+        shingle_ids_of,
+        shingle_structs_of,
+        word_hash_structs,
+    )
+
     common = "alpha beta gamma"
     rows = [
         (i, f"{common} doc{i % 3} unique{i} tail{i} words here and more")
         for i in range(6)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    max_df, threshold = 2, 0.05
 
     def run(**kw):
         return sorted(
             (r.id_a, r.id_b, r.jaccard)
             for r in DD.ngram_jaccard_pairs(
-                df, k_shingle=3, threshold=0.05, max_df=2, **kw
+                df, k_shingle=3, threshold=threshold, max_df=max_df, **kw
             ).collect()
         )
 
-    kernel = run()
-    fallback = run(hot_broadcast_limit=0)
-    expr = run(use_arrow=False)
-    assert kernel == fallback == expr
-    assert kernel  # the guard must not empty the result entirely
+    staged = df.select("doc_id", word_hash_structs("text").alias("wh"))
+    sets = {
+        r.doc_id: set(r.g)
+        for r in staged.select(
+            "doc_id",
+            F.array_distinct(
+                shingle_ids_of(shingle_structs_of(F.col("wh"), 3))
+            ).alias("g"),
+        ).collect()
+    }
+    gdf: dict[int, int] = {}
+    for grams in sets.values():
+        for g in grams:
+            gdf[g] = gdf.get(g, 0) + 1
+    kept = {i: {g for g in grams if gdf[g] <= max_df} for i, grams in sets.items()}
+    expected = []
+    for a in sorted(kept):
+        for b in sorted(kept):
+            shared = len(kept[a] & kept[b])
+            if a < b and shared:
+                # Spark's round(double, 6): HALF_UP on the shortest decimal form
+                jac = float(
+                    Decimal(repr(shared / len(kept[a] | kept[b]))).quantize(
+                        Decimal("1e-6"), ROUND_HALF_UP
+                    )
+                )
+                if jac >= threshold:
+                    expected.append((a, b, jac))
+
+    assert expected  # the guard must not empty the result entirely
+    assert run() == expected
+    assert run(hot_broadcast_limit=0) == expected
 
 
 def test_containment_guard_paths_equivalent(spark):
@@ -307,24 +346,6 @@ def test_duplicate_spans_no_shared_grams_is_empty(spark):
     rows = [(1, "alpha beta gamma delta"), (2, "five six seven eight")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     assert DD.duplicate_spans(df, k_shingle=3).count() == 0
-
-
-def test_duplicate_spans_tiers_equivalent(spark):
-    rows = [
-        (1, "aa bb one two three four five cc dd"),
-        (2, "one two three four five xx yy zz"),
-        (3, "shared tail phrase here one two three"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def run(**kw):
-        return sorted(
-            (r.doc_id, r.span_start, r.span_end, r.n_windows)
-            for r in DD.duplicate_spans(df, k_shingle=3, **kw).collect()
-        )
-
-    assert run() == run(use_arrow=False)
-    spark.catalog.clearCache()
 
 
 def test_dedup_incremental_lsh_near_and_replay(spark):
@@ -744,3 +765,19 @@ def test_containment_pairs_catches_embedded_duplicate(spark):
     assert r.containment >= 0.9          # short doc fully embedded
     assert r.jaccard < 0.5               # symmetric Jaccard is diluted
     assert (1, 3) not in out and (2, 3) not in out
+
+
+def test_gram_operators_have_one_execution_tier():
+    # the gram operators run only the Arrow kernel (functions/gramkernel.py);
+    # its spec is pinned in tests/test_gramkernel.py, so no public function
+    # takes a parameter that selects the tier
+    import inspect
+
+    from database2ogr_spark.operators import repetition
+
+    for mod in (DD, repetition):
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("_") or fn.__module__ != mod.__name__:
+                continue
+            params = inspect.signature(fn).parameters
+            assert not [p for p in params if "arrow" in p], name
