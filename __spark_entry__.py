@@ -38,6 +38,7 @@ from database2ogr_spark.operators import dedup as DD
 from database2ogr_spark.operators import sampling as SMP
 from database2ogr_spark.operators.asof import asof_join
 from database2ogr_spark.operators.graph import near_dup_groups
+from database2ogr_spark.operators.partitioning import finalize_lifecycle
 from database2ogr_spark.operators import clustering as KM
 from database2ogr_spark.operators import similarity as SIM
 from database2ogr_spark.operators.query import JoinQuery, Query
@@ -2775,7 +2776,7 @@ def q_ann_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 10 barely-similar members, scores lower). Graded relevance =
     the exact rounded cosine; DCG/IDCG use ln(r+1)/ln 2 explicitly so
     both engines run the identical float path."""
-    ranked = _ann_ranked_pairs(spark, sf_dir)
+    ranked, owned = _ann_ranked_pairs(spark, sf_dir)
     ln2 = F.log(F.lit(2.0))
     agg = ranked.groupBy("query_id").agg(
         F.sum(
@@ -2793,7 +2794,7 @@ def q_ann_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(0.0))
         ).alias("dcg"),
     )
-    return agg.select(
+    out = agg.select(
         "query_id",
         F.round(F.col("dcg"), 6).alias("dcg"),
         F.round(F.col("idcg"), 6).alias("idcg"),
@@ -2801,6 +2802,7 @@ def q_ann_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("idcg") > 0, F.col("dcg") / F.col("idcg")), 6
         ).alias("ndcg"),
     )
+    return finalize_lifecycle(out, owned)
 
 
 @register(twin="""
@@ -8206,15 +8208,20 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.lsh_topk(emb, queries_df, k=5, bits=3, dim=64, query_id_col="query_id")
 
 
-def _ann_ranked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ann_ranked_pairs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[DataFrame]]:
     """The one scored-pair scan behind ann_recall_lsh and ann_ndcg: every
     (query, corpus vector) pair of the rotated query set (vec_id % 97 ==
     3) with its rounded cosine ``sim``, its multiprobe membership
     ``probed`` (bits=3 bucket equal to the query's or to one of its three
     1-bit neighbours), its exact rank ``re`` and its ANN rank ``ra``
     (bucket matches first, so both top-10 sets fall out of one shuffle).
-    The bucket and cosine are unrolled SQL strings; the persists are a
-    projection barrier so the bucket evaluates per vector, not per pair."""
+    The bucket and cosine are unrolled SQL strings. Returns the ranked
+    pairs and the persisted corpus and query projections, which the caller
+    releases with ``finalize_lifecycle`` on its per-query result (an A/B
+    at sf0.1 measured the persists paying there, against scanning the
+    embeddings parquet for the cross join)."""
     emb = _emb(spark, sf_dir)
     c = emb.select(
         "vec_id",
@@ -8247,9 +8254,10 @@ def _ann_ranked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_ann = Window.partitionBy("query_id").orderBy(
         F.col("probed").desc(), F.col("sim").desc(), F.col("vec_id").asc()
     )
-    return pairs.withColumn("re", F.row_number().over(w_exact)).withColumn(
+    ranked = pairs.withColumn("re", F.row_number().over(w_exact)).withColumn(
         "ra", F.row_number().over(w_ann)
     )
+    return ranked, [c, q]
 
 
 # recall@10 of the bits=3 multi_probe=3 sign-LSH ANN vs
@@ -8322,7 +8330,7 @@ def q_ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     contiguously and both top-10 sets fall out of a single shuffle (the
     operator-composed version scanned and scored the corpus twice,
     ~2× this entry's cost at sf0.1)."""
-    ranked = _ann_ranked_pairs(spark, sf_dir)
+    ranked, owned = _ann_ranked_pairs(spark, sf_dir)
     agg = ranked.groupBy("query_id").agg(
         F.sum(F.when(F.col("re") <= 10, 1).otherwise(0))
         .cast("long")
@@ -8338,9 +8346,10 @@ def q_ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall = F.round(
         F.col("n_hits") / F.least(F.lit(10), F.col("n_exact")), 6
     )
-    return agg.select(
+    out = agg.select(
         "query_id", "n_exact", "n_hits", recall.alias("recall")
     ).withColumn("meets_floor", F.col("recall") >= 0.3)
+    return finalize_lifecycle(out, owned)
 
 
 # in-engine logistic quality classifier: 3 unrolled GD iterations

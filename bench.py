@@ -319,11 +319,13 @@ def _release_all_blocks(spark) -> None:
     """Deterministically drop EVERY persisted RDD block, including
     ``localCheckpoint`` blocks.
 
-    ``spark.catalog.clearCache()`` only unpersists CacheManager-registered
-    relations (``df.persist()``); the eager ``localCheckpoint`` blocks the
-    dedup/graph operators use for lineage truncation are raw persisted RDDs
-    the ContextCleaner reclaims only after a JVM GC notices the checkpointed
-    DataFrame became unreachable — i.e. at a nondeterministic later time.
+    Operators unpersist what they persist before returning (the
+    registry-wide build loop in ``tests/test_check_oracle_harness.py``
+    pins an empty CacheManager after every build), but the eager
+    ``localCheckpoint`` blocks they use for lineage truncation are raw
+    persisted RDDs the ContextCleaner reclaims only after a JVM GC notices
+    the checkpointed DataFrame became unreachable — i.e. at a
+    nondeterministic later time.
     Round 9 showed exactly the predicted failure: the two checkpoint-heavy
     queries (khop_reach_sketched, containment) swung 2.4-4.9x between runs
     on identical data and plans while the other 177 queries sat flat,
@@ -392,13 +394,11 @@ def main() -> None:
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             pass_times[name] = time.perf_counter() - t0
-            # operators that persist() intermediates (LSH signatures, shingle
-            # tables) would otherwise accumulate block-manager memory across
-            # the suite — measured 4-10x slowdowns on later queries from the
-            # resulting GC pressure. Each query runs against a cold cache,
-            # and _release_all_blocks additionally drops localCheckpoint
-            # blocks clearCache cannot see (a measured instability source).
-            spark.catalog.clearCache()
+            # operators release their own persists, but the localCheckpoint
+            # blocks of their lineage-truncated results are left to the
+            # ContextCleaner; dropping them here starts each query on an
+            # empty block manager (leftover blocks were a measured 4-10x
+            # slowdown and instability source for later queries).
             _release_all_blocks(spark)
         per_pass.append(pass_times)
         # ambient load per pass: SCALE.md attributed several

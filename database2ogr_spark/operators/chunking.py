@@ -41,7 +41,7 @@ class ChunkText:
     def eval(self, text: str, size: int, stride: int):
         if not text:
             return
-        toks = [t for t in _WS.split(text.strip()) if t]
+        toks = [t for t in _WS.split(text) if t]
         n = len(toks)
         if n == 0:
             return

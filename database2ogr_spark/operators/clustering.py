@@ -16,8 +16,10 @@ cosine assignment, mean update) expressed in Spark's execution model:
   the k·dim result is collected to the driver to become the next
   broadcast. At 100 TB each iteration is exactly one corpus scan plus a
   kilobyte-scale shuffle;
-- the input projection is persisted across iterations and unpersisted
-  before returning, so n_iter iterations do one parquet read.
+- the input projection is persisted across iterations, so n_iter
+  iterations and the final assignment pass do one source read; each
+  operator releases it through ``partitioning.finalize_lifecycle``
+  (eager checkpoint of its result, then unpersist) before it returns.
 
 Everything is deterministic and engine-portable, which is what makes the
 DuckDB oracle possible: initial centroids are the k corpus vectors with
@@ -49,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from database2ogr_spark.functions.hashing import stable_hash64
+from database2ogr_spark.operators.partitioning import finalize_lifecycle
 
 #: rounding applied to centroid coordinates between iterations and to
 #: similarities before argmax — both mirrored verbatim in the DuckDB twin
@@ -65,8 +68,9 @@ def _fit_centroids(
     vec_col: str,
     seed: int,
 ):
-    """Run Lloyd iterations; returns (persisted projection, final centroid
-    matrix as a rounded k×dim numpy array, vec spark type string)."""
+    """Run Lloyd iterations; returns (the persisted (vec_id, v) projection,
+    final centroid matrix as a rounded k×dim numpy array, vec spark type
+    string). The caller releases the projection."""
     import numpy as np
 
     vec_type = dict(corpus.dtypes)[vec_col]
@@ -160,21 +164,14 @@ def kmeans_embeddings(
         return corpus.sparkSession.createDataFrame(
             [], "vec_id long, cluster_id int, cluster_size long"
         )
-    assigned = _assign_final(sel, cents, vec_type, with_vec=False).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    assigned = _assign_final(sel, cents, vec_type, with_vec=False)
     sizes = assigned.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
     out = assigned.join(F.broadcast(sizes), "cluster_id").select(
         "vec_id", "cluster_id", "cluster_size"
     )
-    # sel stays persisted until the caller materializes `out` — the final
-    # assignment pass is lazy, so unpersisting here would force it to
-    # re-read and re-project the corpus from source (same cache lifecycle
-    # as semantic_dedup and the dedup pair operators: callers clearCache
-    # between queries, as bench/tests do)
-    return out
+    return finalize_lifecycle(out, [sel])
 
 
 def _assign_final(
@@ -262,10 +259,7 @@ def semantic_dedup(
     out = assigned.groupBy("cluster_id").applyInPandas(
         prune, schema="vec_id long, cluster_id int"
     )
-    # note: sel stays persisted until the caller materializes `out` —
-    # unpersisting here would force recomputation of the whole fit;
-    # bench/tests clearCache between queries (documented lifecycle)
-    return out
+    return finalize_lifecycle(out, [sel])
 
 
 def davies_bouldin(
@@ -368,6 +362,4 @@ def davies_bouldin(
         F.count(F.lit(1)).cast("bigint").alias("k_used"),
         F.round(F.avg("r"), 6).alias("db_index"),
     )
-    # sel stays persisted until the caller materializes (same cache
-    # lifecycle as kmeans_embeddings; bench/tests clearCache)
-    return out
+    return finalize_lifecycle(out, [sel])

@@ -422,7 +422,6 @@ def decontaminate(
     text_col: str = "text",
     *,
     k: int = 13,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: drop corpus docs sharing ANY word k-gram
     with any benchmark doc (the standard 13-gram overlap rule used by
@@ -432,10 +431,8 @@ def decontaminate(
     (``gramkernel.distinct_gram_table``: one md5 per word, integer rolling
     k-gram ids — no k-gram strings), so the match key is an 8-byte bigint.
     The benchmark gram set is tiny relative to the corpus (eval suites vs
-    100 TB), so it broadcasts by default and contamination testing is a
-    map-side semi-join — the corpus is never shuffled at all; set
-    ``broadcast_benchmark=False`` if the blocklist outgrows executor memory
-    and let it shuffle-join.
+    100 TB), so it always broadcasts and contamination testing is a
+    map-side semi-join — the corpus is never shuffled at all.
 
     Docs with fewer than k words contribute one whole-doc gram (the shingle
     fallback): such a doc is only flagged when the benchmark contains the
@@ -449,11 +446,9 @@ def decontaminate(
         return distinct_gram_table(spread(df), id_col, text_col, k)
 
     bench_grams = grams(benchmark).select("gram").distinct()
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     contaminated = (
         grams(corpus)
-        .join(bench_grams, "gram", "left_semi")
+        .join(F.broadcast(bench_grams), "gram", "left_semi")
         .select(F.col("id").alias(id_col))
         .distinct()
     )
@@ -818,7 +813,6 @@ def contamination_fraction(
     text_col: str = "text",
     *,
     k: int = 13,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Per-document benchmark-overlap fraction: |doc grams ∩ benchmark
     grams| / |doc grams| over distinct word k-grams.
@@ -847,13 +841,11 @@ def contamination_fraction(
         .select("gram")
         .distinct()
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     corpus_grams = distinct_gram_table(
         spread(corpus), id_col, text_col, k, with_count=True
     )
     hits = (
-        corpus_grams.join(bench_grams, "gram", "left_semi")
+        corpus_grams.join(F.broadcast(bench_grams), "gram", "left_semi")
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
@@ -883,7 +875,6 @@ def decontaminate_fraction(
     *,
     k: int = 13,
     max_frac: float = 0.1,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Fraction-threshold decontamination: drop corpus docs whose distinct
     k-gram overlap with the benchmark exceeds ``max_frac`` of the doc's own
@@ -891,10 +882,7 @@ def decontaminate_fraction(
     frac > 0) — pinned in tests. Returns surviving rows, original schema.
     """
     flagged = (
-        contamination_fraction(
-            corpus, benchmark, id_col, text_col, k=k,
-            broadcast_benchmark=broadcast_benchmark,
-        )
+        contamination_fraction(corpus, benchmark, id_col, text_col, k=k)
         .filter(F.col("frac") > max_frac)
         .select(id_col)
     )

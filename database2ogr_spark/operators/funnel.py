@@ -229,26 +229,19 @@ def audience_overlap(
     who purchase', the segmentation question the per-event counts can't
     answer. Ordered pairs a < b once each.
 
-    Plan: ONE distinct over (type, user) (the only corpus-sized
-    shuffle), PERSISTED because three branches reuse it (sizes, both
-    self-join sides — unpersisted it re-executed the corpus distinct
-    per branch: 8 exchanges, measured; callers clearCache when done,
-    the dedup-operator contract), then a user-keyed self-join bounded
-    by each user's distinct-type count (≤ #types, a constant) for
-    intersections, and a #types-row broadcast for set sizes —
-    |a∪b| = |a|+|b|−|a∩b|, never a second corpus pass. Pairs with
+    Plan: a distinct over (type, user) (the only corpus-sized shuffle),
+    then a user-keyed self-join bounded by each user's distinct-type
+    count (≤ #types, a constant) for intersections, and a #types-row
+    broadcast for set sizes — |a∪b| = |a|+|b|−|a∩b|. Nothing is
+    persisted: both join sides share one distinct exchange, and the sizes
+    read a second one, because the join's not-null filter on the user is
+    pushed below the distinct (8 exchanges in the plan). Pairs with
     empty intersection appear with jaccard 0 via the type-pair spine
     (absence IS the signal for disjoint audiences).
 
     Output: (type_a, type_b, n_a, n_b, n_both, jaccard rounded 6).
     """
-    from pyspark import StorageLevel
-
-    tu = (
-        events.select(F.col(type_col).alias("t"), F.col(user_col).alias("u"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    tu = events.select(F.col(type_col).alias("t"), F.col(user_col).alias("u")).distinct()
     sizes = tu.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
     both = (
         tu.alias("a")
@@ -357,26 +350,19 @@ def churn_weekly(
     convention, no calendar functions).
 
     n_churned = n_prev − n_retained by inclusion-exclusion: ONE distinct
-    over (week, user) (the only corpus-sized shuffle — PERSISTED: four
-    branches reuse it; callers clearCache, the dedup-operator contract),
-    one self-join shifted by a week for the retained counts, two
-    #weeks-row joins on the week spine. Weeks with zero actives count as full churn of the
+    over (week, user) (the only corpus-sized shuffle; the two self-join
+    sides share one exchange, the actives count reads another), one
+    self-join shifted by a week for the retained counts, two #weeks-row joins on the week spine. Weeks with zero actives count as full churn of the
     predecessor (n_retained 0) and an empty base for the next row —
     rate NULL when the base week is empty.
 
     Output: (week, n_prev, n_retained, n_churned, churn_rate rounded 6).
     """
     events = within_time_domain(events, ts_col)
-    from pyspark import StorageLevel
-
     week = (
         F.floor(F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400)) / F.lit(7))
     ).cast("long")
-    wu = (
-        events.select(week.alias("w"), F.col(user_col).alias("u"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    wu = events.select(week.alias("w"), F.col(user_col).alias("u")).distinct()
     act = wu.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     both = (
         wu.alias("a")

@@ -358,34 +358,28 @@ def pagerank_integer(
     (100·deg(u))`` — the relative ordering (what centrality is used for) is
     the standard one.
 
-    Scale: the degree-annotated edge table is computed once and persisted
-    (callers clearCache when done, same contract as the dedup operators);
-    each iteration is ONE join of edges⋈ranks (shuffle on the src key) and
-    ONE aggregate (shuffle on dst) — cost linear in |E| per round, no
-    driver-side graph, lineage linear in ``iters`` (for tens of rounds add
-    the localCheckpoint cadence of ``connected_components`` above). Nodes
-    with no in-edges settle at the base mass.
+    Scale: the degree-annotated edge table is one shuffle of the edge
+    stream; each iteration is ONE join of edges⋈ranks (shuffle on the src
+    key) and ONE aggregate (shuffle on dst) — cost linear in |E| per round,
+    no driver-side graph, lineage linear in ``iters`` (for tens of rounds
+    add the localCheckpoint cadence of ``connected_components`` above).
+    Nothing is persisted: every reference to the edge table plans the same
+    exchange, which the one job's exchange reuse runs once. Nodes with no
+    in-edges settle at the base mass.
     """
     from pyspark.sql.window import Window
 
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    # r11 (guide §2.4): annotate out-degree with a window count over ONE
-    # shuffle of the edge stream instead of groupBy+join — the join form
-    # evaluated the caller's whole edge-construction subtree twice (once
-    # for e, once under the degree aggregate) before the persist could
-    # capture it. count().over(partitionBy) equals the group count exactly.
-    ed = e.withColumn(
-        "deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # nodes MUST derive from the persisted table: it re-enters the plan once
-    # per iteration (the no-in-edge left join), and deriving it from the raw
-    # edge lineage re-ran the caller's whole edge construction every round
-    # (measured 7.2 s → 2.9 s at sf0.1 on the co-purchase entry); one
-    # explode pass, not a union of selects (which scans the cache twice)
+    # annotate out-degree with a window count over ONE shuffle of the edge
+    # stream instead of groupBy+join, which evaluated the caller's whole
+    # edge-construction subtree twice (once for e, once under the degree
+    # aggregate). count().over(partitionBy) equals the group count exactly.
+    ed = e.withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
+    # nodes derive from ed, so every round's no-in-edge left join reuses
+    # the same edge exchange; one explode pass, not a union of selects
     nodes = (
         ed.select(F.explode(F.array(F.col("src"), F.col("dst"))).alias("node"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     base = (100 - damping_pct) * scale // 100
     ranks = nodes.withColumn("rank_c9", F.lit(scale).cast("bigint"))
@@ -429,16 +423,12 @@ def label_propagation(
     Scale: per round, one edges⋈labels join (shuffle on src), one
     (node,label) count aggregate, one max-count argmin-label resolution
     (two small aggs on the already-shuffled key), one anti-join to carve
-    out seeds. Cost linear in |E| per round; the degree-style persist and
-    checkpoint cadence notes from ``pagerank_integer``/
-    ``connected_components`` apply unchanged.
+    out seeds. Cost linear in |E| per round; nothing is persisted (the
+    rounds reuse the edge exchange within the one job), and the checkpoint
+    cadence note from ``connected_components`` applies unchanged.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sd = seeds.select(
-        F.col(node_col).alias("node"), F.col(label_col).alias("label")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    sd = seeds.select(F.col(node_col).alias("node"), F.col(label_col).alias("label"))
     labels = sd
     for _ in range(iters):
         votes = (

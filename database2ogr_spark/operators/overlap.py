@@ -54,14 +54,9 @@ def source_overlap_matrix(
     # ONE corpus-wide shuffle: groupBy gram with collect_set makes the
     # cross-document distinct implicit (set semantics), and the
     # per-source marginals are DERIVED from the collected sets (explode
-    # over #grams rows), never a second corpus pass. The persist is
-    # operator-owned (dedup.py convention — callers/bench clearCache):
-    # three branches (pairs + the two marginal joins) read this table.
-    sets = (
-        sg.groupBy("gram")
-        .agg(F.array_sort(F.collect_set("source")).alias("ss"))
-        .persist()
-    )
+    # over #grams rows), never a second corpus pass. Three branches (pairs
+    # + the two marginal joins) read this table; they share its exchange.
+    sets = sg.groupBy("gram").agg(F.array_sort(F.collect_set("source")).alias("ss"))
     per_source = (
         sets.select(F.explode("ss").alias("source"))
         .groupBy("source")

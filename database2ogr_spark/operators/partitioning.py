@@ -105,10 +105,9 @@ def write_bucketed(
     key: str | list[str],
     *,
     buckets: int = 32,
-    sort: bool = True,
     mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` hash-bucketed (and by default sorted) by ``key``.
+    """Persist ``df`` hash-bucketed and sorted by ``key``.
 
     Bucketing trades one write-time shuffle for zero shuffles on every later
     join/aggregation keyed on ``key``: two tables bucketed by the same key
@@ -128,15 +127,14 @@ def write_bucketed(
     path-based parquet writes do not persist bucket metadata.
     """
     cols = [key] if isinstance(key, str) else list(key)
-    writer = (
+    (
         df.repartition(buckets, *[F.col(c) for c in cols])
         .write.mode(mode)
         .bucketBy(buckets, *cols)
+        .sortBy(*cols)
         .format("parquet")
+        .saveAsTable(table)
     )
-    if sort:
-        writer = writer.sortBy(*cols)
-    writer.saveAsTable(table)
 
 
 def bucketed_join(spark, left_table: str, right_table: str, on: str | list[str]) -> DataFrame:

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -465,9 +464,7 @@ def kmv_audience_jaccard(
     """
     if k < 8:
         raise ValueError("k must be >= 8")
-    tu = events.select(
-        F.col(type_col).alias("t"), F.col(user_col).alias("u")
-    ).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    tu = events.select(F.col(type_col).alias("t"), F.col(user_col).alias("u")).distinct()
     h = stable_hash64(F.col("u").cast("string"), seed=seed)
     th = tu.select("t", h.alias("h")).distinct()
     w = Window.partitionBy("t").orderBy(F.col("h").asc())
@@ -501,7 +498,7 @@ def kmv_audience_jaccard(
         .cast("bigint")
         .alias("n_match"),
     )
-    # exact audit: inclusion-exclusion off the same persisted distinct
+    # exact audit: inclusion-exclusion off the same distinct
     sizes = tu.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
     both = (
         tu.alias("x")

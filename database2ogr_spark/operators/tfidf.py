@@ -31,20 +31,14 @@ def tfidf_top_terms(
     Deterministic tie-break: score desc, then term asc. Output:
     (doc_id, term, tfidf rounded to 6, rank).
     """
-    from pyspark import StorageLevel
-
     tokens = spread(df).select(
         F.col(id_col).alias("id"), F.explode(words(text_col)).alias("term")
     )
     # tf is already the distinct (doc, term) set — document frequencies and
     # the corpus count derive from it instead of re-exploding and
-    # re-shuffling the full token stream; persisted since three branches
-    # read it (it holds ≤ one row per distinct doc-term pair).
-    tf = (
-        tokens.groupBy("id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # re-shuffling the full token stream; its three readers share its
+    # exchange (it holds ≤ one row per distinct doc-term pair).
+    tf = tokens.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = tf.select("id").distinct().agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (

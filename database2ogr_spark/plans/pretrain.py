@@ -13,16 +13,16 @@ Every stage is a lazy DataFrame transform, so the pipeline composes into
 Catalyst plans with exactly the shuffles the component operators document
 (stats are narrow; dedup is one fingerprint agg + semi-join;
 decontamination broadcasts benchmark grams; resampling aggregates
-#sources rows; the split is a narrow CASE). Two intermediates ARE
-persisted: each filtering stage's output feeds multiple downstream
-branches (the survivor aggregation and the semi-join left side; the
-resample rate aggregation and the fan-out join), and without a
-materialization boundary every branch re-evaluates the whole upstream
-subtree — the evaluation count doubles per stage (measured 4.4 s → 3.0 s
-at sf0.1 from the two persists alone). At 100 TB the same boundaries
-become checkpoint-to-parquet between stages — the standard practice this
-plan's persist calls stand in for. Same cache lifecycle contract as the
-dedup operators: callers clearCache between invocations.
+#sources rows; the split is a narrow CASE). :func:`pretrain_corpus`
+persists nothing: its stage outputs each feed two branches, but an
+interleaved A/B at sf0.1 measured persisting them behind an eager
+``finalize_lifecycle`` checkpoint as not reliably faster than
+re-evaluating them (the checkpoint materializes the whole corpus-sized
+result).
+:func:`pretrain_ledger`, whose result is ids only, keeps its three stage
+persists and releases them through ``finalize_lifecycle`` before it
+returns; there they measured faster. At 100 TB the boundaries become
+checkpoint-to-parquet between stages.
 
 Order rationale (the standard pipeline ordering argument):
 - dedup runs AFTER the quality filter so survivor selection is not wasted
@@ -41,6 +41,7 @@ from pyspark.storagelevel import StorageLevel
 
 from database2ogr_spark.operators.cleaning import quality_filter_flags
 from database2ogr_spark.operators.dedup import decontaminate, dedup_exact_survivors
+from database2ogr_spark.operators.partitioning import finalize_lifecycle
 from database2ogr_spark.operators.sampling import split_corpus, temperature_resample
 
 
@@ -62,11 +63,9 @@ def pretrain_corpus(
     flags = quality_filter_flags(docs, id_col=id_col, text_col=text_col)
     kept = docs.join(
         flags.filter(F.col("keep")).select(id_col), on=id_col, how="left_semi"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    deduped = dedup_exact_survivors(kept, id_col, text_col)
-    clean = decontaminate(deduped, benchmark, id_col, text_col, k=13).persist(
-        StorageLevel.MEMORY_AND_DISK
     )
+    deduped = dedup_exact_survivors(kept, id_col, text_col)
+    clean = decontaminate(deduped, benchmark, id_col, text_col, k=13)
     mixed = temperature_resample(clean, alpha=alpha, id_col=id_col)
     return split_corpus(mixed, splits, id_col=id_col)
 
@@ -90,9 +89,10 @@ def pretrain_ledger(
     drop set is the anti-join of consecutive stage outputs, so the ledger
     partitions the input exactly: Σ stage counts = |input|.
 
-    Same persist boundaries and cache-lifecycle contract as
-    :func:`pretrain_corpus` (each stage output feeds two branches: the
-    next stage and its own anti-join).
+    Each stage output feeds two branches (the next stage and its own
+    anti-join), so the three are persisted; the eager
+    ``finalize_lifecycle`` checkpoint of the id-only ledger releases them
+    before the call returns.
     """
     flags = quality_filter_flags(docs, id_col=id_col, text_col=text_col)
     kept = docs.join(
@@ -101,9 +101,6 @@ def pretrain_ledger(
     deduped = dedup_exact_survivors(kept, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # r11: clean feeds two branches too (the decontaminate anti-join and
-    # the 'kept' ledger rows) — without the persist the decontaminate
-    # shingle+semi-join ran twice off the cached deduped table
     clean = decontaminate(deduped, benchmark, id_col, text_col, k=13).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -122,4 +119,6 @@ def pretrain_ledger(
             clean.select(id_col).withColumn("stage", F.lit("kept"))
         )
     )
-    return ledger.withColumn("kept", F.col("stage") == "kept")
+    return finalize_lifecycle(
+        ledger.withColumn("kept", F.col("stage") == "kept"), [kept, deduped, clean]
+    )

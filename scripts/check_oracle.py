@@ -529,11 +529,10 @@ def sweep(
                 else:
                     line = _grade_self(spark, name, fn, data_dir, p.conf)
             finally:
-                # same hygiene as bench.py: leftover persisted/localCheckpoint
-                # blocks from one entry must not shape the next entry's run.
-                # The release drops checkpoint blocks whose lineage is
+                # same hygiene as bench.py: leftover localCheckpoint blocks
+                # from one entry must not shape the next entry's run. The
+                # release drops checkpoint blocks whose lineage is
                 # truncated, so each grader reads rows only inside this try.
-                spark.catalog.clearCache()
                 benchmod._release_all_blocks(spark)
             print(line, flush=True)
             if line.startswith("FAIL"):

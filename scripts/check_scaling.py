@@ -42,11 +42,10 @@ from database2ogr_spark.session import get_spark
 def _run_once(qs, name, spark, sf_dir) -> float:
     t0 = time.perf_counter()
     qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # cache release OUTSIDE the timed window (ADVICE r9: the fixed
-    # clearCache overhead inflated sub-second small-SF denominators,
-    # biasing ratios downward), matching the bench.py protocol
+    # block release OUTSIDE the timed window (a fixed release overhead
+    # inflated sub-second small-SF denominators, biasing ratios downward),
+    # matching the bench.py protocol
     dt = time.perf_counter() - t0
-    spark.catalog.clearCache()
     benchmod._release_all_blocks(spark)
     return dt
 

@@ -85,7 +85,6 @@ def main() -> None:
                         f.write(f"== execution {i}/{len(plans) - 1} ==\n{plan}\n")
             else:
                 run()
-            spark.catalog.clearCache()
             _release_all_blocks(spark)
             spark.sparkContext.setJobDescription(None)
         results[name] = times

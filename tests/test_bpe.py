@@ -140,7 +140,6 @@ def test_local_and_distributed_merge_loops_agree(spark):
 
 
 def test_learn_leaves_nothing_persisted(spark):
-    spark.catalog.clearCache()
     learn_bpe(_docs(spark, ["aa bb aa bb aa"]), num_merges=2).collect()
     jsc = spark.sparkContext._jsc.sc()
     assert jsc.getPersistentRDDs().size() == 0

@@ -96,20 +96,33 @@ def test_dtype_gate_skips_empty_results(spark):
 
 
 def test_no_registry_entry_declares_complex_output(spark, tmp_path):
-    """Every queries() entry must emit scalar columns only.  Checked via
-    the declared schema at sf0.001 (schema resolution only — no job runs
-    for most entries; a handful materialize fixture side-inputs)."""
+    """Every queries() entry must emit scalar columns only, and no build
+    may leave a relation in the CacheManager.  Checked via the declared
+    schema at sf0.001 (schema resolution only — no job runs for most
+    entries; a handful materialize fixture side-inputs).
+
+    The cache check is the release rule for persisted intermediates: an
+    operator that persists releases what it persisted before it returns
+    (``partitioning.finalize_lifecycle``), so no caller has to clear the
+    cache after it.  ``persist()`` registers its relation at build time,
+    so a lazily returned persist shows here without running the query."""
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     mod = _check_oracle_mod()
-    offenders = {}
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    offenders, cached = {}, []
+    spark.catalog.clearCache()
     for name, fn in entrymod.queries().items():
         df = fn(spark, "/root/testdata/sf0.001")
         bad = mod.complex_typed_cols(df.schema)
         if bad:
             offenders[name] = bad
+        if not cache.isEmpty():
+            cached.append(name)
+            spark.catalog.clearCache()
     assert not offenders, f"complex-typed outputs would err the driver gate: {offenders}"
+    assert not cached, f"entries left a cached relation after their build: {cached}"
 
 
 def test_dtype_gate_schema_faithful_for_all_null_bigint(spark):

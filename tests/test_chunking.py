@@ -32,8 +32,10 @@ def test_empty_and_whitespace_docs_yield_nothing(spark):
 
 
 def test_whitespace_normalization(spark):
-    got = _chunks(spark, [(1, "  a\tb\n c  ")], size=2, stride=2)
-    assert got == [(1, 0, "a b", 2), (1, 1, "c", 1)]
+    got = _chunks(spark, [(1, "  a\tb\n c  "), (2, "\xa0alpha beta\x85")], size=2, stride=2)
+    # only ASCII whitespace splits: U+00A0 and U+0085 stay inside tokens,
+    # as in the DuckDB twin
+    assert got == [(1, 0, "a b", 2), (1, 1, "c", 1), (2, 0, "\xa0alpha beta\x85", 2)]
 
 
 # ---------------------------------------------------------------------------

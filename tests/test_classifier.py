@@ -74,7 +74,6 @@ def test_lr_must_keep_update_integral(spark):
 
 
 def test_training_leaves_no_cached_tables(spark):
-    spark.catalog.clearCache()
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     train_quality_classifier(_docs(spark), F.col("lang") == "en")
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before

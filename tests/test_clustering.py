@@ -30,16 +30,13 @@ def test_kmeans_recovers_separated_blobs(spark):
         by_cluster.setdefault(r.cluster_id, set()).add(labels[r.vec_id])
     assert all(len(s) == 1 for s in by_cluster.values()), by_cluster
     assert {r.cluster_size for r in out} == {20}
-    spark.catalog.clearCache()
 
 
 def test_kmeans_deterministic_across_runs(spark):
     df = _blobs(spark, spread=1.0)
     a = sorted((r.vec_id, r.cluster_id) for r in KM.kmeans_embeddings(df, k=4).collect())
-    spark.catalog.clearCache()
     b = sorted((r.vec_id, r.cluster_id) for r in KM.kmeans_embeddings(df, k=4).collect())
     assert a == b
-    spark.catalog.clearCache()
 
 
 def test_kmeans_empty_input(spark):
@@ -63,14 +60,16 @@ def test_semantic_dedup_lowest_id_survives(spark):
     assert kept.isdisjoint({100, 101, 102})
     # non-duplicates all survive (blob spread is far below the threshold)
     assert len(kept) == 60
-    spark.catalog.clearCache()
 
 
 def test_kmeans_sizes_join_is_broadcast(spark):
+    from database2ogr_spark.session import executed_plans
+
     df = _blobs(spark)
-    plan = KM.kmeans_embeddings(df, k=3, n_iter=1)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    spark.catalog.clearCache()
+    # the join runs in the eager finalize_lifecycle checkpoint, the last
+    # execution before the returned scan of it
+    _, plans = executed_plans(spark, lambda: KM.kmeans_embeddings(df, k=3, n_iter=1))
+    assert "BroadcastHashJoin" in plans[-2], plans
 
 
 def test_davies_bouldin_separated_beats_mixed(spark):
@@ -96,4 +95,3 @@ def test_davies_bouldin_separated_beats_mixed(spark):
     assert r_tight.k_used == 2
     assert r_tight.db_index < r_cloud.db_index
     assert r_tight.db_index < 0.2  # tight separated blobs -> tiny DB
-    spark.catalog.clearCache()

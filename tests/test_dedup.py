@@ -366,14 +366,12 @@ def test_dedup_incremental_lsh_near_and_replay(spark):
     )
     out = DD.dedup_incremental_lsh(batch, store, threshold=0.5)
     assert sorted(r.doc_id for r in out.collect()) == [12]
-    spark.catalog.clearCache()
 
     # advancing the store with the admitted rows makes a replay a no-op
     admitted = batch.filter("doc_id = 12")
     store2 = store.union(DD.minhash_band_table(admitted))
     out2 = DD.dedup_incremental_lsh(batch, store2, threshold=0.5)
     assert out2.count() == 0
-    spark.catalog.clearCache()
 
 
 def test_duplicate_spans_matches_bruteforce_property(spark):
@@ -423,7 +421,6 @@ def test_duplicate_spans_matches_bruteforce_property(spark):
             (r.doc_id, r.span_start, r.span_end, r.n_windows)
             for r in DD.duplicate_spans(df, k_shingle=2).collect()
         )
-        spark.catalog.clearCache()
         # reference positions are in WINDOW space; short docs (<k words)
         # collapse to a single whole-doc shingle at position 0, matching
         # the operator's fallback
@@ -571,7 +568,6 @@ def test_dedup_operators_release_intermediate_caches(spark):
         simhash_pairs,
     )
 
-    spark.catalog.clearCache()
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     sc = spark.sparkContext
 

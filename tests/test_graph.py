@@ -196,7 +196,6 @@ def test_star_kernel_matches_union_find_on_random_graphs(spark):
                 parent[hi] = lo
         want = {(v, find(v)) for v in parent}
         assert got == want, trial
-        spark.catalog.clearCache()
 
 
 def test_star_kernel_high_diameter_chain(spark):
@@ -210,7 +209,6 @@ def test_star_kernel_high_diameter_chain(spark):
     rows = connected_components_star(df, max_iter=12).collect()
     assert len(rows) == 60
     assert {r.component for r in rows} == {0}
-    spark.catalog.clearCache()
 
 
 # ---------------------------------------------------------------------------

@@ -214,7 +214,6 @@ def test_pretrain_ledger_partitions_input_exactly(spark):
     }
     # resampling can drop (rate < 1) but never add docs: pipeline ⊆ kept
     assert pipeline_docs <= kept_ledger
-    spark.catalog.clearCache()
 
 
 def test_events_dashboard_composes_verified_blocks(spark):

@@ -575,7 +575,6 @@ def test_mine_bitext_mutual_nn_and_margin(spark):
     assert got == {(i, 100 + i) for i in range(6)}
     for r in out:
         assert r.margin >= 1.0 and r.cosine_sim > 0.99
-    spark.catalog.clearCache()
 
 
 def test_mine_bitext_rejects_nonmutual_and_validates(spark):
@@ -596,7 +595,6 @@ def test_mine_bitext_rejects_nonmutual_and_validates(spark):
     assert len(out) == 1 and (out[0].src_id, out[0].tgt_id) == (0, 10)
     with _pytest.raises(ValueError):
         mine_bitext(src, tgt, k=0)
-    spark.catalog.clearCache()
 
 
 def test_intrinsic_dimension_recovers_manifold_dim(spark):

@@ -260,7 +260,6 @@ def test_countmin_tokens_query_releases_its_persist(spark):
     form of the dedup cache test)."""
     import __spark_entry__ as entrymod
 
-    spark.catalog.clearCache()
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     out = entrymod.queries()["countmin_tokens"](spark, "/root/testdata/sf0.001")
