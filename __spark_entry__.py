@@ -215,11 +215,16 @@ SELECT c_custkey, c_name, c_mktsegment,
 FROM customer
 """
 
+#: RE2's POSIX whitespace class [\t\n\v\f\r ], the DuckDB spelling of
+#: Java's ``\s`` (RE2's own ``\s`` lacks the vertical tab): ``[{_SPACE}]``
+#: outside a bracket expression, ``{_SPACE}`` inside one
+_SPACE = "[:space:]"
+
 #: normalized text / words / k=3 shingle ids — DuckDB twins of
 #: functions/hashing.py normalize_text, words, word_hash_structs,
 #: shingle_structs_of, shingle_ids_of (same md5-per-word + rolling-hash
 #: arithmetic mod 2^31-1; ``s`` is the list of 62-bit ids s1·2^31+s2)
-_NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+_NORM_SQL = f"trim(regexp_replace(lower(text), '[{_SPACE}]+', ' ', 'g'))"
 _WORDS_SQL = f"list_filter(string_split({_NORM_SQL}, ' '), x -> x <> '')"
 _MH_P = 2147483647  # mirrors hashing.MINHASH_P
 _MH_B1, _MH_B2 = 1000003, 1000033  # mirrors hashing._ROLL_B1/_ROLL_B2
@@ -518,7 +523,7 @@ def _pretrain_filter_ctes() -> str:
                   length(text)::INT AS n_chars,
                   len({_WORDS_SQL})::INT AS ws_tokens,
                   (length(text) -
-                   length(regexp_replace(text, '[^\\w\\s]', '', 'g')))::INT
+                   length(regexp_replace(text, '[^\\w{_SPACE}]', '', 'g')))::INT
                     AS n_punct,
                   list_reduce(list_prepend(CAST(0 AS BIGINT),
                     list_transform({_WORDS_SQL},
@@ -717,7 +722,7 @@ f AS (
       ELSE 0.0 END AS x3,
     CASE WHEN length(text) > 0
       THEN round(CAST(length(text) -
-             length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS DOUBLE)
+             length(regexp_replace(text, '[^\\w{_SPACE}]', '', 'g')) AS DOUBLE)
            / CAST(length(text) AS DOUBLE), {fd})
       ELSE 0.0 END AS x4
   FROM documents WHERE text IS NOT NULL),
@@ -1132,7 +1137,7 @@ def q_tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
               SELECT doc_id,
                 length(text)::INT AS n_chars_calc,
                 len(list_filter({_WORDS_SQL}, x -> x <> ''))::INT AS ws_tokens,
-                (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))::INT
+                (length(text) - length(regexp_replace(text, '[^\\w{_SPACE}]', '', 'g')))::INT
                   AS n_punct,
                 {_hits_sql("en")} AS en_hits
               FROM documents),
@@ -1559,10 +1564,10 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_centroids(_emb(spark, sf_dir))
 
 
-@register(twin="""
+@register(twin=f"""
             WITH t AS (
               SELECT doc_id,
-                list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
+                list_filter(regexp_split_to_array(text, '[{_SPACE}]+'), x -> x <> '')
                   AS toks
               FROM documents),
             c AS (
@@ -1689,7 +1694,7 @@ def q_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
               SELECT doc_id,
                 length(text)::INT AS n_chars,
                 len({_WORDS_SQL})::INT AS ws_tokens,
-                (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))::INT
+                (length(text) - length(regexp_replace(text, '[^\\w{_SPACE}]', '', 'g')))::INT
                   AS n_punct,
                 list_reduce(list_prepend(CAST(0 AS BIGINT),
                   list_transform({_WORDS_SQL}, w -> CAST(length(w) AS BIGINT))),
@@ -1989,8 +1994,8 @@ def q_dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
                 length(text)::INT AS n_chars_calc,
                 len(list_filter({_WORDS_SQL}, x -> x <> ''))::INT AS ws_tokens,
                 len(regexp_extract_all(text,
-                  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))::INT AS re_tokens,
-                (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))::INT
+                  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_SPACE}]'))::INT AS re_tokens,
+                (length(text) - length(regexp_replace(text, '[^\\w{_SPACE}]', '', 'g')))::INT
                   AS n_punct,
                 {_hits_sql("en")} AS en_hits,
                 list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -2265,9 +2270,9 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retention_cohorts(ev, bucket_days=7)
 
 
-@register(twin="""
+@register(twin=f"""
             WITH tk AS (SELECT doc_id, list_filter(string_split(
-                          regexp_replace(text, '\\s+', ' ', 'g'), ' '),
+                          regexp_replace(text, '[{_SPACE}]+', ' ', 'g'), ' '),
                           x -> x <> '') AS w
                         FROM documents),
             tok AS (SELECT doc_id, unnest(w) AS token FROM tk),
@@ -2926,9 +2931,9 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # two unrolled BM25 passes with deterministic feedback cuts
-@register(twin="""
+@register(twin=f"""
             WITH tk AS (SELECT doc_id, list_filter(string_split(
-                          regexp_replace(text, '\\s+', ' ', 'g'), ' '),
+                          regexp_replace(text, '[{_SPACE}]+', ' ', 'g'), ' '),
                           x -> x <> '') AS w
                         FROM documents),
             tok AS (SELECT doc_id, unnest(w) AS token FROM tk),
@@ -3031,9 +3036,9 @@ def q_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Dirichlet-smoothed QL replay off the corpus tokenization
-@register(twin="""
+@register(twin=f"""
             WITH tk AS (SELECT doc_id, list_filter(string_split(
-                          regexp_replace(text, '\\s+', ' ', 'g'), ' '),
+                          regexp_replace(text, '[{_SPACE}]+', ' ', 'g'), ' '),
                           x -> x <> '') AS w
                         FROM documents),
             tok AS (SELECT doc_id, unnest(w) AS token FROM tk),
@@ -4627,9 +4632,9 @@ def q_auc_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # RRF: the bm25_topk twin chain ranked + the cosine_topk twin
 # chain for query vec 0, fused by 1/(60+rank)
-@register(twin="""
+@register(twin=f"""
             WITH tk AS (SELECT doc_id, list_filter(string_split(
-                          regexp_replace(text, '\\s+', ' ', 'g'), ' '),
+                          regexp_replace(text, '[{_SPACE}]+', ' ', 'g'), ' '),
                           x -> x <> '') AS w
                         FROM documents),
             tok AS (SELECT doc_id, unnest(w) AS token FROM tk),
@@ -5951,13 +5956,13 @@ def q_decontaminate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(twin="""
+@register(twin=f"""
             WITH s AS (
               SELECT doc_id, string_split(text, ' a ') AS paras
               FROM documents WHERE text IS NOT NULL),
             c AS (SELECT doc_id, paras,
                     list_transform(paras, p -> len(list_filter(
-                      string_split_regex(trim(p), '\\s+'), x -> x <> '')))
+                      string_split_regex(trim(p), '[{_SPACE}]+'), x -> x <> '')))
                       AS cnts
                   FROM s),
             k AS (SELECT doc_id, paras, cnts,
@@ -5973,7 +5978,7 @@ def q_decontaminate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id,
               CASE WHEN kept_n = 0 THEN
                 array_to_string(list_slice(list_filter(
-                  string_split_regex(trim(paras[1]), '\\s+'), x -> x <> ''),
+                  string_split_regex(trim(paras[1]), '[{_SPACE}]+'), x -> x <> ''),
                   1, 30), ' ')
               ELSE array_to_string(list_slice(paras, 1, kept_n), ' a ') END
                 AS text_trunc,
@@ -7813,7 +7818,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "fingerprint")
 
 
-# Bloom-probe twin (hash_tier="stable", m=2^23, 5 K-M positions):
+# Bloom-probe twin (m=2^23, 5 K-M positions):
 # h1/h2 are the md5 60-bit pair, position i = (h1 + i·h2) mod m —
 # all inside signed int64, so the false-positive set reproduces
 # exactly; a doc is dropped iff some gram has ALL 5 bits set
@@ -7845,15 +7850,15 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-sketch decontamination (operators/dedup.decontaminate_bloom) —
     the beyond-broadcast scale twin of q_decontaminate, same bench/corpus
-    split. Graded at ``hash_tier="stable"``: the Kirsch-Mitzenmacher probe
-    runs on md5-derived 60-bit hash pairs whose position arithmetic the
-    DuckDB oracle replays exactly, so the sketch (false positives included)
-    is deterministic and hash-matched; the xxhash64 fast tier and the
-    no-false-negatives guarantee are pytest-verified in tests/test_dedup.py."""
+    split. The Kirsch-Mitzenmacher probe runs on md5-derived 60-bit hash
+    pairs whose position arithmetic the DuckDB oracle replays exactly, so
+    the sketch (false positives included) is deterministic and
+    hash-matched; the no-false-negatives guarantee is pytest-verified in
+    tests/test_dedup.py."""
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
-    return DD.decontaminate_bloom(corpus, bench, k=13, hash_tier="stable").select(
+    return DD.decontaminate_bloom(corpus, bench, k=13).select(
         "doc_id", "lang", "source"
     )
 
@@ -8591,10 +8596,10 @@ def q_novelty_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # positional phrase retrieval: tokenization positions + the
 # offset-subtract intersection replayed straight off the corpus
-@register(twin="""
+@register(twin=f"""
             WITH tk AS (
               SELECT doc_id, list_filter(string_split(
-                regexp_replace(text, '\\s+', ' ', 'g'), ' '),
+                regexp_replace(text, '[{_SPACE}]+', ' ', 'g'), ' '),
                 x -> x <> '') AS w
               FROM documents),
             pos AS (

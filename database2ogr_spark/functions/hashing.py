@@ -1,13 +1,9 @@
 """Deterministic, cross-engine-stable hashing primitives for dedup operators.
 
-Two tiers:
-
-- ``stable_hash64`` — md5-based 60-bit hash. Bit-for-bit reproducible in any
-  engine with md5 (the DuckDB oracle uses ``('0x'||substr(md5(..),1,15))::bigint``),
-  so correctness checks are exact. md5 is ~3-4x slower than xxhash64 but still
-  JVM-side and codegen-friendly.
-- ``fast_hash64`` — Spark's native ``xxhash64`` for production-scale paths
-  where cross-engine parity is not needed (same semantics, faster).
+``stable_hash64`` is an md5-based 60-bit hash, bit-for-bit reproducible in
+any engine with md5 (the DuckDB oracle uses
+``('0x'||substr(md5(..),1,15))::bigint``), so correctness checks are exact.
+It runs JVM-side and is codegen-friendly.
 
 Shingling / MinHash / SimHash are built purely from higher-order functions on
 these hashes — no UDFs, no shuffle until the caller groups/joins. The gram
@@ -42,11 +38,6 @@ def stable_hash64(col: Column | str, seed: int = 0) -> Column:
     s = _c(col).cast("string")
     payload = F.concat(F.lit(f"{seed}\x1f"), s) if seed else s
     return F.conv(F.substring(F.md5(payload), 1, 15), 16, 10).cast("bigint")
-
-
-def fast_hash64(col: Column | str, seed: int = 42) -> Column:
-    """Production-tier hash (xxhash64) — not oracle-reproducible."""
-    return F.xxhash64(_c(col), F.lit(seed))
 
 
 def normalize_text(col: Column | str) -> Column:

@@ -6,9 +6,11 @@ pack_sequences`` for the downstream packing op).
 Implemented as a Python UDTF (table function, PySpark 4 API) applied with a
 SQL LATERAL join — the one operator family in this engine whose natural
 shape is one-row-to-many-rows with per-row Python logic. Tokenization is the
-ASCII-whitespace split shared with the rest of the text stack (Java/RE2
-``\\s`` parity — see ``functions/gramkernel._WS``), so the DuckDB oracle
-reproduces chunks byte-for-byte.
+split on Java's ``\\s`` class ``[ \\t\\n\\x0b\\f\\r]`` shared with the rest
+of the text stack (``_WS`` here and in ``functions/gramkernel``). RE2's
+``\\s`` lacks the vertical tab, so the DuckDB twin splits on the POSIX
+class ``[[:space:]]`` instead, and the oracle reproduces chunks
+byte-for-byte.
 
 Scale: the UDTF is a narrow per-partition map (Arrow-batched rows in,
 generator rows out) — no shuffle, state is one document at a time. Window

@@ -135,7 +135,6 @@ def remove_boilerplate(
     sep: str = "\n",
     min_df: int = 2,
     out_col: str = "clean_text",
-    broadcast_hot: bool = False,
 ) -> DataFrame:
     """Drop lines shared by >= ``min_df`` docs from every document
     (RefinedWeb/CCNet boilerplate removal: nav menus, cookie banners, footers
@@ -150,13 +149,11 @@ def remove_boilerplate(
     counting and from the reassembled text, and matching is exact on the
     trimmed line.
 
-    ``broadcast_hot`` forces a broadcast of the hot-line table into the
-    flagging join. Default OFF: the hot table (every trimmed line appearing
-    in >= ``min_df`` docs) is bounded by corpus distinct-line count, which
-    on a real crawl at ``min_df=2`` can be billions of rows — far past the
-    broadcast limit. Leave it to AQE, which broadcasts when the runtime size
-    qualifies; opt in only when ``min_df`` is high enough that the table is
-    provably small.
+    The flagging join carries no broadcast hint: the hot table (every
+    trimmed line appearing in >= ``min_df`` docs) is bounded by the
+    corpus's distinct-line count, which on a real crawl at ``min_df=2`` can
+    be billions of rows — far past the broadcast limit. AQE broadcasts it
+    when the runtime size qualifies.
     """
     arr = _norm_lines(F.col(text_col), sep)
     # sentinel: a doc with zero non-empty lines still needs a group row; ''
@@ -165,8 +162,6 @@ def remove_boilerplate(
     hot = boilerplate_lines(df, text_col=text_col, sep=sep, min_df=min_df).select(
         "line", F.lit(True).alias("__hot")
     )
-    if broadcast_hot:
-        hot = F.broadcast(hot)
     exploded = df.select(F.col(id_col), F.posexplode(arr).alias("__pos", "line"))
     flagged = exploded.join(hot, "line", "left")
     kept = F.when(

@@ -17,11 +17,13 @@ Five families (BASELINE.json north star), all shuffle-conscious:
   normalized-dot-product machinery.
 
 All hashing is the md5-based ``stable_hash64`` so the DuckDB oracle can
-reproduce results exactly; swap ``fast_hash64`` in for raw throughput.
+reproduce results exactly.
 
 Persist lifecycle: the pair operators persist small intermediates
-(signature/gram tables) that both sides of their self-joins read. Each
-operator exits through ``partitioning.finalize_lifecycle``: the pair table
+(signature/gram tables) that both sides of their self-joins read, each one
+kept because an interleaved A/B at sf0.1 measured it faster than the lazy
+plan (SCALE.md "Persist hygiene"). Each operator exits through
+``partitioning.finalize_lifecycle``: the pair table
 (small by construction: thresholded matches, 3 scalars/row) is eagerly
 ``localCheckpoint``-ed inside the call, lineage is truncated, and every
 operator-owned intermediate is unpersisted before returning, so the
@@ -372,9 +374,11 @@ def minhash_lsh_pairs(
     threshold).
 
     The signature table (~``8·num_hashes`` bytes/doc — tiny relative to the
-    corpus) is persisted MEMORY_AND_DISK so the banding self-join reads it
-    once instead of recomputing shingling+hashing for both sides; released
-    per the module persist-lifecycle contract.
+    corpus) is persisted MEMORY_AND_DISK so the banding self-join reads one
+    kernel pass; released per the module persist-lifecycle contract. The
+    persist pays on the near-dup group entries built on this operator
+    (``near_dup_groups``, ``split_corpus_grouped``), not measurably on the
+    bare pair entry.
     """
     assert num_hashes % bands == 0
 
@@ -464,7 +468,6 @@ def decontaminate_bloom(
     k: int = 13,
     num_bits: int = 1 << 23,
     num_hashes: int = 5,
-    hash_tier: str = "fast",
 ) -> DataFrame:
     """Bloom-filter decontamination — the beyond-broadcast twin of
     :func:`decontaminate`.
@@ -485,12 +488,10 @@ def decontaminate_bloom(
     - two independent hashes per gram are computed JVM-side and combined
       Kirsch-Mitzenmacher style (``g_i = h1 + i*h2 mod m``) in vectorized
       numpy — the Python stage touches only two int64 columns per gram.
-      ``hash_tier="fast"`` (default) uses ``xxhash64(gram)`` /
-      ``xxhash64(gram, salt)`` with uint64 wraparound; ``"stable"`` uses
-      the md5-based 60-bit ``stable_hash64`` pair (seeds 0/131) whose
-      position arithmetic stays inside signed int64 (h1 + 4·h2 < 2^63),
-      so the DuckDB oracle replays the probe bit-for-bit — same two-tier
-      policy as functions/hashing.py;
+      The pair is the md5-based 60-bit ``stable_hash64`` (seeds 0/131),
+      whose position arithmetic stays inside signed int64
+      (h1 + 4·h2 < 2^63), so the DuckDB oracle replays the probe
+      bit-for-bit;
     - each benchmark partition builds a local m-bit numpy bitmap in one
       ``mapInPandas`` pass; partition bitmaps OR-reduce via ``treeReduce``
       (depth 2 — the driver sees O(m), not O(partitions·m));
@@ -507,24 +508,16 @@ def decontaminate_bloom(
 
     m = int(num_bits)
     n_hash = int(num_hashes)
-    salt = 0x9E3779B97F4A7C15 - (1 << 64)  # golden-ratio salt as signed i64
 
     if benchmark.isEmpty():  # no blocklist → nothing to drop (and treeReduce
         return corpus  # would raise on the empty partition-bitmap RDD)
 
     def hashed_grams(df: DataFrame) -> DataFrame:
-        g = distinct_gram_table(spread(df), id_col, text_col, k)
-        if hash_tier == "stable":
-            gs = F.col("gram").cast("string")
-            return g.select(
-                "id",
-                stable_hash64(gs).alias("h1"),
-                stable_hash64(gs, seed=131).alias("h2"),
-            )
-        return g.select(
+        gs = F.col("gram").cast("string")
+        return distinct_gram_table(spread(df), id_col, text_col, k).select(
             "id",
-            F.xxhash64("gram").alias("h1"),
-            F.xxhash64("gram", F.lit(salt).cast("long")).alias("h2"),
+            stable_hash64(gs).alias("h1"),
+            stable_hash64(gs, seed=131).alias("h2"),
         )
 
     def positions(h1: "np.ndarray", h2: "np.ndarray") -> "np.ndarray":

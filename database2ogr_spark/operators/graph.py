@@ -480,12 +480,11 @@ def triangle_count(
     is three shuffles — degree agg, wedge self-join on the apex, closing-edge
     join on the (v,w) pair — with no iteration and no driver state; the
     (deg, id) total order rides the oriented edge table so the wedge stage
-    needs no extra join to compare endpoints.
+    needs no extra join to compare endpoints. The plan is returned lazily:
+    the branches that reread the canonical, degree and oriented tables run
+    in one query execution, which an interleaved A/B at sf0.1 measured
+    faster than persisting the three tables (SCALE.md "Persist hygiene").
     """
-    # r11 (guide §2.4): persist the canonical edge table — it feeds the
-    # degree table AND the orientation join, and an expensive upstream
-    # derivation (the co-purchase basket expansion in the graded entry)
-    # would otherwise replay once per reference
     und = (
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("u"),
@@ -493,16 +492,14 @@ def triangle_count(
         )
         .filter(F.col("u") < F.col("v"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # one explode pass over und (NOT a union of two selects, which plans
-    # the und subtree twice); deg is |V| rows and read three times
-    # downstream (two orientation joins + the final report join)
+    # the und subtree twice); deg is |V| rows, read by the two
+    # orientation joins and the final report join
     deg = (
         und.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # orient by the (degree, id) total order; carry the tail's order key so
     # the wedge join can order its two tails without another join
@@ -517,7 +514,7 @@ def triangle_count(
         F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("s"),
         F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         F.when(lo_first, F.col("dv")).otherwise(F.col("du")).alias("dt"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # wedges from apex s: tails ordered by the same (deg, id) key, so the
     # closing edge — if present — is oriented exactly (t1 -> t2)
     w1 = oriented.select(
@@ -545,7 +542,7 @@ def triangle_count(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    out = (
+    return (
         deg.join(per_vertex, "node", "left")
         .select(
             "node",
@@ -564,7 +561,6 @@ def triangle_count(
             .alias("clustering_c"),
         )
     )
-    return finalize_lifecycle(out, [oriented, deg, und])
 
 
 def khop_reach(
@@ -610,8 +606,7 @@ def khop_reach(
     # source filter, so re-deriving the (much smaller) filtered streams
     # beats materializing the full table — 3.96 s (lazy) vs 4.67 s
     # (persisted) at sf0.1 on the co-purchase entry, and the persisted
-    # variant's pass spread was worse. Contrast triangle_count above,
-    # where all four references are unfiltered and the persist wins.
+    # variant's pass spread was worse.
     e = edges.select(
         F.col(src_col).alias("v"), F.col(dst_col).alias("u")
     ).distinct()
@@ -719,16 +714,12 @@ def khop_reach_approx(
         raise ValueError("p must be in [4, 16]")
     m = 1 << p
     w = 60 - p
-    # the deduped edge table is referenced once per hop plus twice in the
-    # seed round; persist it so an expensive upstream edge DERIVATION
-    # (e.g. the co-purchase self-join feeding the graded entry) runs once,
-    # not per reference (same lifecycle as connected_components above:
-    # persist → final eager localCheckpoint → unpersist)
-    e = (
-        edges.select(F.col(src_col).alias("v"), F.col(dst_col).alias("u"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # the deduped edge table is referenced twice in the seed round and
+    # once per hop; it is not persisted, which an interleaved A/B at sf0.1
+    # measured no slower (SCALE.md "Persist hygiene")
+    e = edges.select(
+        F.col(src_col).alias("v"), F.col(dst_col).alias("u")
+    ).distinct()
     # hash every node ONCE; rho via bin()-bitlength (no float log2)
     h = stable_hash64(F.col("node"), seed=seed)
     node_sketch = (
@@ -747,196 +738,178 @@ def khop_reach_approx(
         )
     )
     # S0 contribution stream: one row per edge carrying the out-neighbor's
-    # register value. For hops == 1 it reduces to the long-form sketch via
-    # one (v, reg) max aggregation (the estimate tail wants one row per
-    # present register). For hops > 1 the pack kernel below performs the
-    # same max as part of packing (``np.maximum.at``), so the stream feeds
-    # ``repartition("v")`` DIRECTLY — the old ``groupBy("v","reg")`` added
-    # a full extra Exchange of the same rows immediately before the pack
-    # shuffle for a max the kernel recomputed anyway (r12, guide §2.4).
+    # register value. The pack kernel below takes the max over duplicate
+    # (v, reg) contributions (``np.maximum.at``), so the stream feeds
+    # ``repartition("v")`` directly, with no (v, reg) aggregation first.
     pairs = e.join(node_sketch, e["u"] == node_sketch["node"]).select(
         "v", "reg", F.col("rho").alias("mj")
     )
-    if hops == 1:
-        sketch = pairs.groupBy("v", "reg").agg(F.max("mj").alias("mj"))
-    else:
-        node_type = e.schema["v"].dataType.simpleString()
-        # r12 (guide §4.2): registers travel between hops as a FIXED-WIDTH
-        # 2^p-byte binary value, not array<tinyint>, and the kernels are
-        # mapInArrow. An Arrow binary column is one contiguous data buffer
-        # plus offsets, so a whole batch of registers becomes an (n, 2^p)
-        # int8 matrix via frombuffer+reshape — zero per-row Python work —
-        # where the old list-typed column cost a per-row Arrow-list →
-        # numpy conversion plus an np.vstack over object arrays on every
-        # batch (the dominant merge cost at |E| rows/hop), and the JVM
-        # side wrote per-element array cells instead of one memcpy.
-        packed_schema = f"v {node_type}, regs binary"
+    node_type = e.schema["v"].dataType.simpleString()
+    # registers travel between hops as a FIXED-WIDTH 2^p-byte binary
+    # value and the kernels are mapInArrow: an Arrow binary column is one
+    # contiguous data buffer plus offsets, so a whole batch of registers
+    # becomes an (n, 2^p) int8 matrix via frombuffer+reshape — zero
+    # per-row Python work.
+    packed_schema = f"v {node_type}, regs binary"
 
-        def _mat_of(col):
-            """Zero-copy (n, 2^p) int8 view of a binary register column."""
-            import numpy as np
-            import pyarrow as pa
+    def _mat_of(col):
+        """Zero-copy (n, 2^p) int8 view of a binary register column."""
+        import numpy as np
+        import pyarrow as pa
 
-            n = len(col)
-            bufs = col.buffers()
-            off_dt = (
-                np.int64 if pa.types.is_large_binary(col.type) else np.int32
+        n = len(col)
+        bufs = col.buffers()
+        off_dt = (
+            np.int64 if pa.types.is_large_binary(col.type) else np.int32
+        )
+        offs = np.frombuffer(bufs[1], dtype=off_dt)[
+            col.offset : col.offset + n + 1
+        ]
+        flat = np.frombuffer(bufs[2], dtype=np.int8)
+        if offs[-1] - offs[0] == n * m:
+            return flat[offs[0] : offs[-1]].reshape(n, m)
+        # defensive slow path (never taken for our own fixed-width rows)
+        return np.stack([np.frombuffer(x.as_py(), np.int8) for x in col])
+
+    def _emit_packed(acc, vtype):
+        """Accumulator dict → one (v, regs binary) record batch: the
+        register matrix becomes the Arrow data buffer via one
+        tobytes(), offsets are the uniform 2^p stride."""
+        import numpy as np
+        import pyarrow as pa
+
+        k = len(acc)
+        vs_out = np.array(list(acc.keys()))
+        mat_out = np.stack(list(acc.values()))
+        offsets = np.arange(k + 1, dtype=np.int32) * m
+        regs_arr = pa.Array.from_buffers(
+            pa.binary(),
+            k,
+            [
+                None,
+                pa.py_buffer(offsets.tobytes()),
+                pa.py_buffer(mat_out.tobytes()),
+            ],
+        )
+        return pa.RecordBatch.from_arrays(
+            [pa.array(vs_out).cast(vtype), regs_arr], names=["v", "regs"]
+        )
+
+    def _pack(batches):
+        """Long (v, reg, mj) contribution rows → one dense 2^p-byte
+        register value per v. The max over duplicate (v, reg)
+        contributions happens here (``np.maximum.at``). Streams Arrow
+        batches with a per-v running accumulator — a v's rows may
+        span batches, and memory is O(distinct v per partition · 2^p)
+        bytes, never the whole partition."""
+        import numpy as np
+
+        acc: dict = {}
+        vtype = None
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            vcol = rb.column(0)
+            vtype = vcol.type
+            vs = vcol.to_numpy(zero_copy_only=False)
+            order = np.argsort(vs, kind="stable")
+            vs = vs[order]
+            regs = (
+                rb.column(1).to_numpy(zero_copy_only=False)[order]
+                .astype(np.int64)
             )
-            offs = np.frombuffer(bufs[1], dtype=off_dt)[
-                col.offset : col.offset + n + 1
-            ]
-            flat = np.frombuffer(bufs[2], dtype=np.int8)
-            if offs[-1] - offs[0] == n * m:
-                return flat[offs[0] : offs[-1]].reshape(n, m)
-            # defensive slow path (never taken for our own fixed-width rows)
-            return np.stack([np.frombuffer(x.as_py(), np.int8) for x in col])
+            mjs = (
+                rb.column(2).to_numpy(zero_copy_only=False)[order]
+                .astype(np.int8)
+            )
+            bounds = np.flatnonzero(np.r_[True, vs[1:] != vs[:-1]])
+            ends = np.r_[bounds[1:], len(vs)]
+            for v, s, en in zip(vs[bounds], bounds, ends):
+                arr = acc.get(v)
+                if arr is None:
+                    arr = np.zeros(m, dtype=np.int8)
+                    acc[v] = arr
+                np.maximum.at(arr, regs[s:en], mjs[s:en])
+        if acc:
+            yield _emit_packed(acc, vtype)
 
-        def _emit_packed(acc, vtype):
-            """Accumulator dict → one (v, regs binary) record batch: the
-            register matrix becomes the Arrow data buffer via one
-            tobytes(), offsets are the uniform 2^p stride."""
-            import numpy as np
-            import pyarrow as pa
+    def _merge(batches):
+        """Elementwise max over each v's packed register rows.
 
-            k = len(acc)
-            vs_out = np.array(list(acc.keys()))
-            mat_out = np.stack(list(acc.values()))
-            offsets = np.arange(k + 1, dtype=np.int32) * m
-            regs_arr = pa.Array.from_buffers(
-                pa.binary(),
-                k,
+        Vectorized per batch (frombuffer+reshape, sort by v,
+        ``np.maximum.reduceat`` at group boundaries), running dict
+        across batches — memory is O(distinct v per partition · 2^p)
+        bytes, never the whole partition, so a hub node with millions
+        of in-edges streams through instead of materializing."""
+        import numpy as np
+
+        acc: dict = {}
+        vtype = None
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            vcol = rb.column(0)
+            vtype = vcol.type
+            vs = vcol.to_numpy(zero_copy_only=False)
+            mat = _mat_of(rb.column(1))
+            order = np.argsort(vs, kind="stable")
+            vs = vs[order]
+            mat = mat[order]
+            bounds = np.flatnonzero(np.r_[True, vs[1:] != vs[:-1]])
+            reduced = np.maximum.reduceat(mat, bounds, axis=0)
+            for v, row in zip(vs[bounds], reduced):
+                prev = acc.get(v)
+                acc[v] = row if prev is None else np.maximum(prev, row)
+        if acc:
+            yield _emit_packed(acc, vtype)
+
+    def _unpack(batches):
+        """Packed binary registers → sparse long rows (v, reg, mj>0)
+        for the estimate tail: one vectorized nonzero scatter per
+        batch instead of a JVM posexplode generating 2^p rows per
+        node before the filter."""
+        import numpy as np
+        import pyarrow as pa
+
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            vcol = rb.column(0)
+            vs = vcol.to_numpy(zero_copy_only=False)
+            mat = _mat_of(rb.column(1))
+            rows, cols = np.nonzero(mat)
+            yield pa.RecordBatch.from_arrays(
                 [
-                    None,
-                    pa.py_buffer(offsets.tobytes()),
-                    pa.py_buffer(mat_out.tobytes()),
+                    pa.array(vs[rows]).cast(vcol.type),
+                    pa.array(cols.astype(np.int32)),
+                    pa.array(mat[rows, cols].astype(np.int32)),
                 ],
-            )
-            return pa.RecordBatch.from_arrays(
-                [pa.array(vs_out).cast(vtype), regs_arr], names=["v", "regs"]
+                names=["v", "reg", "mj"],
             )
 
-        def _pack(batches):
-            """Long (v, reg, mj) contribution rows → one dense 2^p-byte
-            register value per v. The max over duplicate (v, reg)
-            contributions happens here (``np.maximum.at``). Streams Arrow
-            batches with a per-v running accumulator — a v's rows may
-            span batches, and memory is O(distinct v per partition · 2^p)
-            bytes, never the whole partition."""
-            import numpy as np
-
-            acc: dict = {}
-            vtype = None
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                vcol = rb.column(0)
-                vtype = vcol.type
-                vs = vcol.to_numpy(zero_copy_only=False)
-                order = np.argsort(vs, kind="stable")
-                vs = vs[order]
-                regs = (
-                    rb.column(1).to_numpy(zero_copy_only=False)[order]
-                    .astype(np.int64)
-                )
-                mjs = (
-                    rb.column(2).to_numpy(zero_copy_only=False)[order]
-                    .astype(np.int8)
-                )
-                bounds = np.flatnonzero(np.r_[True, vs[1:] != vs[:-1]])
-                ends = np.r_[bounds[1:], len(vs)]
-                for v, s, en in zip(vs[bounds], bounds, ends):
-                    arr = acc.get(v)
-                    if arr is None:
-                        arr = np.zeros(m, dtype=np.int8)
-                        acc[v] = arr
-                    np.maximum.at(arr, regs[s:en], mjs[s:en])
-            if acc:
-                yield _emit_packed(acc, vtype)
-
-        def _merge(batches):
-            """Elementwise max over each v's packed register rows.
-
-            Vectorized per batch (frombuffer+reshape, sort by v,
-            ``np.maximum.reduceat`` at group boundaries), running dict
-            across batches — memory is O(distinct v per partition · 2^p)
-            bytes, never the whole partition, so a hub node with millions
-            of in-edges streams through instead of materializing."""
-            import numpy as np
-
-            acc: dict = {}
-            vtype = None
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                vcol = rb.column(0)
-                vtype = vcol.type
-                vs = vcol.to_numpy(zero_copy_only=False)
-                mat = _mat_of(rb.column(1))
-                order = np.argsort(vs, kind="stable")
-                vs = vs[order]
-                mat = mat[order]
-                bounds = np.flatnonzero(np.r_[True, vs[1:] != vs[:-1]])
-                reduced = np.maximum.reduceat(mat, bounds, axis=0)
-                for v, row in zip(vs[bounds], reduced):
-                    prev = acc.get(v)
-                    acc[v] = row if prev is None else np.maximum(prev, row)
-            if acc:
-                yield _emit_packed(acc, vtype)
-
-        def _unpack(batches):
-            """Packed binary registers → sparse long rows (v, reg, mj>0)
-            for the estimate tail: one vectorized nonzero scatter per
-            batch instead of a JVM posexplode generating 2^p rows per
-            node before the filter."""
-            import numpy as np
-            import pyarrow as pa
-
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                vcol = rb.column(0)
-                vs = vcol.to_numpy(zero_copy_only=False)
-                mat = _mat_of(rb.column(1))
-                rows, cols = np.nonzero(mat)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(vs[rows]).cast(vcol.type),
-                        pa.array(cols.astype(np.int32)),
-                        pa.array(mat[rows, cols].astype(np.int32)),
-                    ],
-                    names=["v", "reg", "mj"],
-                )
-
+    packed = pairs.repartition("v").mapInArrow(_pack, schema=packed_schema)
+    for _ in range(hops - 1):
+        # each round's input is eagerly checkpointed (the iterative
+        # plan-blowup guard, and the round references it twice — join
+        # side + union side); the final round's output feeds only the
+        # estimate tail, once, so it stays lazy
+        packed = packed.localCheckpoint(eager=True)
+        propagated = (
+            e.alias("e")
+            .join(packed.alias("s"), F.col("e.u") == F.col("s.v"))
+            .select(F.col("e.v").alias("v"), F.col("s.regs").alias("regs"))
+        )
         packed = (
-            pairs.repartition("v")
-            .mapInArrow(_pack, schema=packed_schema)
-            .localCheckpoint(eager=True)
+            propagated.union(packed)
+            .repartition("v")
+            .mapInArrow(_merge, schema=packed_schema)
         )
-        for i in range(hops - 1):
-            propagated = (
-                e.alias("e")
-                .join(packed.alias("s"), F.col("e.u") == F.col("s.v"))
-                .select(F.col("e.v").alias("v"), F.col("s.regs").alias("regs"))
-            )
-            merged = (
-                propagated.union(packed)
-                .repartition("v")
-                .mapInArrow(_merge, schema=packed_schema)
-            )
-            # intermediate rounds are eagerly checkpointed (the iterative
-            # plan-blowup guard, and the next round references the table
-            # twice — join side + union side); the FINAL round feeds only
-            # the estimate tail once, so it stays lazy and materializes
-            # inside the operator's single finalize job (r12: one fewer
-            # job + packed-table materialization per call)
-            packed = (
-                merged
-                if i == hops - 2
-                else merged.localCheckpoint(eager=True)
-            )
-        sketch = packed.mapInArrow(
-            _unpack, schema=f"v {node_type}, reg int, mj int"
-        )
+    # with hops == 1 no round runs: the packed seed registers unpack to
+    # the (v, reg, max mj) rows of the one-hop sketch (present registers
+    # have mj >= 1, and _unpack keeps exactly the nonzero ones)
+    sketch = packed.mapInArrow(
+        _unpack, schema=f"v {node_type}, reg int, mj int"
+    )
     # estimate from sparse registers: absent registers contribute 2^61
     # each to the exact DECIMAL numerator (mj = 0). A PRESENT register
     # always has mj >= 1 (rho = w+1 - bitlength(shiftright(h, p)) and the
@@ -965,9 +938,6 @@ def khop_reach_approx(
         (e_raw <= F.lit(2.5 * m)) & (v0 > 0),
         F.lit(float(m)) * F.log(F.lit(float(m)) / v0.cast("double")),
     ).otherwise(e_raw)
-    out = per_node.select(
+    return per_node.select(
         F.col("v").alias("node"), F.round(est, 6).alias("estimate")
     )
-    # the per-hop checkpoints inside the loop truncate the iteration; the
-    # estimate tail's plan is read back with session.executed_plans
-    return finalize_lifecycle(out, [e])

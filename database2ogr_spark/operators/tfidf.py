@@ -454,15 +454,13 @@ def tfidf_cosine_pairs(
 
     Plan: one explode+agg for (doc, term, tf); df/idf via a term agg;
     norms via a doc agg; candidate products via the term-keyed
-    equi-join (never all-pairs); one (id_a, id_b) agg. The weighted
-    (id, term, wt) table is PERSISTED because four plan branches read
-    it (pair sides a/b + both norm joins) and Spark does not share
-    identical subtrees — without the persist the whole tf pipeline runs
-    four times (audited). The result leaves through
-    ``partitioning.finalize_lifecycle``: it is materialized via eager
-    ``localCheckpoint`` and the weighted table is unpersisted before
-    returning, so no operator-owned blocks outlive the call. Cosine is
-    rounded 6 dp BEFORE the threshold compare, so the cut is engine-stable.
+    equi-join (never all-pairs); one (id_a, id_b) agg. Four plan branches
+    read the weighted (id, term, wt) table (pair sides a/b + both norm
+    joins). The plan is returned lazily with nothing persisted: an
+    interleaved A/B at sf0.1 measured the lazy plan faster than
+    materializing the weighted table and checkpointing the result. Cosine
+    is rounded 6 dp BEFORE the threshold compare, so the cut is
+    engine-stable.
 
     Output: (id_a, id_b, cosine), id_a < id_b.
     """
@@ -504,7 +502,6 @@ def tfidf_cosine_pairs(
                 )
             ).alias("wt"),
         )
-        .persist()
     )
     norms = weighted.groupBy("id").agg(
         F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm")
@@ -521,7 +518,7 @@ def tfidf_cosine_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
     )
-    result = (
+    return (
         dots.join(
             norms.select(F.col("id").alias("id_a"), F.col("nrm").alias("na")),
             "id_a",
@@ -539,7 +536,6 @@ def tfidf_cosine_pairs(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    return finalize_lifecycle(result, [weighted])
 
 
 def vocab_growth(
@@ -706,8 +702,6 @@ def kneser_ney_logprob_score(
     partial-agg'd on token keys, nothing beyond bigram_logprob_score's
     cost class; the scoring join chain is the same keyed equi-join shape.
     """
-    from pyspark import StorageLevel
-
     w = words(text_col)
     m = F.greatest(F.size(w) - 1, F.lit(0))
     pairs = (
@@ -722,16 +716,12 @@ def kneser_ney_logprob_score(
         )
         .select("id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     )
-    # r11 (guide §2.2/§3): persist the bigram-count table — four model
-    # aggregations derive from it and would otherwise each replay the
-    # corpus explode+agg — and pre-merge the per-key model tables into it
+    # four model aggregations derive from the bigram-count table, which
+    # stays lazy (persisting it measured no faster in an interleaved A/B
+    # at sf0.1); the per-key model tables are pre-merged into it
     # (model-sized joins) so the corpus-sized scoring stream is joined
     # ONCE on (w1,w2) instead of three times
-    counts = (
-        pairs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    counts = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     left = counts.groupBy("w1").agg(
         F.sum("c12").alias("c1dot"), F.count(F.lit(1)).alias("n1p_w1")
     )
@@ -759,7 +749,7 @@ def kneser_ney_logprob_score(
             * (F.col("n1p_w2").cast(d) / F.col("n_types").cast(d)),
         )
     )
-    out = (
+    return (
         scored.groupBy("id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
@@ -767,4 +757,3 @@ def kneser_ney_logprob_score(
         )
         .select(F.col("id").alias(id_col), "n_bigrams", "logprob")
     )
-    return finalize_lifecycle(out, [counts])

@@ -75,14 +75,14 @@ def test_remove_boilerplate_degenerate_docs(spark):
     assert out[4] == ("", 0)
 
 
-def test_remove_boilerplate_preserves_order_and_broadcast_flag(spark):
+def test_remove_boilerplate_preserves_order(spark):
     df = _docs(
         spark,
         [(1, "z last\nHOT\na first\nHOT\nm mid"), (2, "HOT")],
     )
     row = {
         r["doc_id"]: r
-        for r in remove_boilerplate(df, broadcast_hot=True).collect()
+        for r in remove_boilerplate(df).collect()
     }
     assert row[1]["clean_text"] == "z last\na first\nm mid"
     assert row[1]["n_removed"] == 2

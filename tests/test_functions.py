@@ -125,6 +125,23 @@ def test_stable_hash64_numeric_input_all_seeds(spark):
     assert r7.v == r7s.v
 
 
+def test_words_twin_splits_on_vertical_tab(spark):
+    """Java's ``\\s`` (Spark's ``normalize_text``) includes U+000B and RE2's
+    ``\\s`` (DuckDB) does not: the twin tokenizer ``_WORDS_SQL`` must split
+    every text where ``hashing.words`` does."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    text = "Alpha\x0bbeta \t gamma\x0c\x0bDELTA\x0b"
+    got = one(spark, H.words(F.lit(text))).v
+    twin = duckdb.execute(
+        f"SELECT {entrymod._WORDS_SQL} FROM (SELECT ? AS text)", [text]
+    ).fetchone()[0]
+    assert got == ["alpha", "beta", "gamma", "delta"]
+    assert twin == got
+
+
 def test_shingles_short_doc_fallback(spark):
     r = one(spark, H.shingles(F.lit("only two"), 3))
     assert r.v == ["only two"]

@@ -585,8 +585,8 @@ def test_khop_reach_approx_duckdb_register_merge_twin(spark):
 
 
 def test_khop_reach_approx_hops_one_and_three_paths(spark):
-    """The round-10 packed rewrite has three control paths: hops=1 skips
-    packing entirely (long-form S0 feeds the estimate tail), hops=2 runs
+    """The packed iteration has three control paths: hops=1 runs no merge
+    round (the packed seed registers feed the estimate tail), hops=2 runs
     ONE merge iteration, hops>=3 exercises the repeated
     checkpoint/propagate/union loop. Pin the 1- and 3-hop paths against
     exact reach on a path graph (linear counting regime: estimates land
